@@ -32,21 +32,6 @@ object Robots {
 
   val Permissive: Rules = Rules(0L, Vector.empty, Vector.empty)
 
-  private val parseCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), Rules]()
-
-  /** Executor-side memoized `parse` for the join-form robots gate
-    * (CrawlConfig.robotsViaJoin): the same body recurs for every URL of a
-    * host within a partition, so the per-row cost drops to a map lookup.
-    * Keyed on (body, agent) — RFC 9309 group selection depends on the
-    * agent, so a body-only key would let the first caller's agent poison
-    * every other agent's rules. Bounded (cleared past 10k entries);
-    * output identical to `parse`. */
-  def cachedParse(body: String, agent: String = "graft"): Rules = {
-    if (parseCache.size > 10000) parseCache.clear()
-    parseCache.computeIfAbsent((body, agent), { case (b, a) => parse(b, a) })
-  }
-
   /** Parse a robots.txt body for `agent` (exact token match or "*" group). A
     * specific-agent group, when present, REPLACES the "*" group (RFC 9309 §2.2.1:
     * only the most specific matching group applies). */

@@ -10,9 +10,8 @@ import graft.sources.SnapshotStore
   *
   *   spark-submit --class graft.operators.CrawlMain … \
   *     --base /path/to/store --rounds 5 [--seeds 20] [--host-budget 4]
-  *     [--round-cap 500] [--no-bloom] [--cpus N]
-  *     [--filter-kind bloom|cuckoo] [--filter-shards N]
-  *     [--frontier-deltas] [--adaptive-backoff] [--robots-form fused|map|join]
+  *     [--round-cap 500] [--no-bloom] [--cpus N] [--filter-shards N]
+  *     [--frontier-deltas] [--adaptive-backoff]
   *
   * Runs (or resumes — the store's HEAD decides) the crawl until `rounds`
   * rounds are committed, printing one metrics line per round. On a real
@@ -28,7 +27,7 @@ object CrawlMain {
     // a typo'd option must never silently fall back to a default.
     val flagNames = Set("no-bloom", "frontier-deltas", "adaptive-backoff")
     val keyNames = Set("base", "rounds", "seeds", "host-budget", "round-cap",
-      "filter-kind", "filter-shards", "cpus", "robots-form", "seen-join")
+      "filter-shards", "cpus")
     val (flagArgs, kvArgs) =
       args.partition(a => a.startsWith("--") && flagNames.contains(a.drop(2)))
     if (kvArgs.length % 2 != 0)
@@ -49,12 +48,9 @@ object CrawlMain {
       hostBudget = opts.getOrElse("host-budget", "4").toInt,
       roundCap = opts.getOrElse("round-cap", "500").toInt,
       useBloom = !opts.contains("no-bloom"),
-      filterKind = opts.getOrElse("filter-kind", "bloom"),
       filterShards = opts.getOrElse("filter-shards", "0").toInt,
       frontierDeltas = opts.contains("frontier-deltas"),
-      adaptiveBackoff = opts.contains("adaptive-backoff"),
-      robotsForm = opts.getOrElse("robots-form", "fused"),
-      seenJoin = opts.getOrElse("seen-join", "scan"))
+      adaptiveBackoff = opts.contains("adaptive-backoff"))
     val cpus = opts.getOrElse("cpus",
       sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
 

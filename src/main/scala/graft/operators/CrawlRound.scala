@@ -1,7 +1,10 @@
 package graft.operators
 
-import org.apache.spark.TaskContext
-import org.apache.spark.sql.{Column, Dataset, SparkSession}
+import scala.collection.mutable.ArrayBuffer
+import scala.concurrent.{Await, ExecutionContext, Future}
+import scala.concurrent.duration.Duration
+
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.util.sketch.BloomFilter
@@ -12,14 +15,16 @@ import graft.sources.SnapshotStore
 
 /** One crawl round as a typed Dataset pipeline (SURVEY.md §3.1; BASELINE.json
   * north_star: frontier dequeue → politeness gate → fetch/parse → text
-  * extraction → link extraction/canonicalization → dedup → frontier re-enqueue).
+  * extraction → link extraction/canonicalization → dedup → frontier re-enqueue),
+  * run as five stages: `gate` → `sequence` → `fetch` → `dedup` → `commit`.
   *
   * Scale design (the 1000-executor / 10^10-URL view, exercised at local[N]):
   *  - the fat `html` bytes exist only inside the fetch/parse `mapPartitions` —
   *    text+links are extracted executor-locally and html never shuffles;
   *  - all wide operations key on hashes (xxh64 for ordering/bloom, murmur128
   *    for exact identity), never raw URL strings;
-  *  - robots is a broadcast join (tiny per-host table);
+  *  - robots rules are memoized per executor inside the gate projection — no
+  *    driver robots structure and no robots job;
   *  - the URL-seen probe routes on a broadcast bloom filter: bloom-clear links
   *    are *definitely* new (bloom has no false negatives) and skip the exact
   *    join entirely; only bloom-hits (≈ seen + fpp·new) reach it, and the
@@ -27,8 +32,8 @@ import graft.sources.SnapshotStore
   *    so the seen table itself is only SCANNED, never shuffled. The seen set
   *    stays exact — a false positive costs one wasted join probe, never a
   *    dropped URL (SURVEY.md §4.2 exactness backstop);
-  *  - hot hosts (zipfian frontier) get a salted two-phase politeness top-k so a
-  *    single host cannot skew the window shuffle (SURVEY.md §4.3);
+  *  - every host goes through a salted two-phase politeness top-k so a hot
+  *    host (zipfian frontier) cannot skew the window shuffle (SURVEY.md §4.3);
   *  - the global round sequence is assigned with range-partition + per-partition
   *    offsets — a total order across files without a single-reducer sort.
   */
@@ -45,6 +50,9 @@ object CrawlRound {
   }
 
   private def childPriority(parent: Int): Int = math.max(parent - 1, 0)
+
+  private def shufflePartitions(spark: SparkSession): Int =
+    spark.conf.get("spark.sql.shuffle.partitions", "32").toInt
 
   /** Per-executor robots cache for the fused gate form: rules are "fetched"
     * (SyntheticWeb — the sandbox's only network) and parsed at most once per
@@ -63,23 +71,6 @@ object CrawlRound {
 
   /** xxh64 of a url, computed executor-side — the URL-seen filter key. */
   private val xxh64OfUrl = udf((u: String) => Hashes.xxh64(u))
-
-  /** Distributed cuckoo build over any DataFrame with a `url` column (the
-    * cold-path / regrow rebuild — the seen set never passes through the
-    * driver). Doubles capacity until no insert was dropped. */
-  private[operators] def cuckooOfUrls(urls: org.apache.spark.sql.DataFrame,
-      expectedItems: Long): graft.functions.CuckooFilter = {
-    var cap = math.max(expectedItems, 1024L)
-    var cf: graft.functions.CuckooFilter = null
-    while (cf == null || cf.failedInserts > 0) {
-      val bytes = urls.select(xxh64OfUrl(col("url")).as("h")).coalesce(4)
-        .select(org.apache.spark.sql.graftexpr.CuckooAgg(col("h"), cap).as("cf"))
-        .head().getAs[Array[Byte]](0)
-      cf = graft.functions.CuckooFilter.deserialize(bytes)
-      cap *= 2
-    }
-    cf
-  }
 
   /** Per-shard bloom sizing, CLAMPED to Spark's BloomFilterAggregate limits.
     * BloomFilterAggregate silently clamps estimatedNumItems/numBits to
@@ -106,7 +97,7 @@ object CrawlRound {
   }
 
   /** Distributed bloom build over any DataFrame with a `url` column. */
-  private[operators] def bloomOfUrls(urls: org.apache.spark.sql.DataFrame,
+  private def bloomOfUrls(urls: DataFrame,
       expectedItems: Long, fpp: Double): BloomFilter =
     urls.select(xxh64OfUrl(col("url")).as("h")).coalesce(4)
       .stat.bloomFilter("h", expectedItems, fpp)
@@ -126,8 +117,7 @@ object CrawlRound {
     * shared store and flags rows in place. No filter is ever broadcast or
     * held whole anywhere. */
   private def shardProbe(spark: SparkSession, store: SnapshotStore, k: Int,
-      cand: org.apache.spark.sql.DataFrame, cfg: CrawlConfig)
-      : org.apache.spark.sql.DataFrame = {
+      cand: DataFrame, cfg: CrawlConfig): DataFrame = {
     import spark.implicits._
     val n = cfg.filterShards
     val paths = (0 until n).map(i => store.filterShardPath(k, i)).toArray
@@ -152,18 +142,18 @@ object CrawlRound {
 
   /** J1 exact URL-seen dedup, SHUFFLE form: plain left-anti join. Both sides
     * exchange on the 128-bit key — at 10^10 seen URLs that is a full seen-set
-    * shuffle EVERY round, which is why this is not the default. It remains
-    * the right form when the probe side is O(candidates) (no filter routed
-    * a small suspect set: useBloom=false, shard cold path) or at suspect
-    * cardinalities past broadcast reach (documented in CrawlConfig). */
-  private[graft] def seenAntiJoinShuffle(seen: org.apache.spark.sql.DataFrame,
-      suspects: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
+    * shuffle EVERY round, which is why filter-routed suspects never take it.
+    * It is the form for probe sides that are O(candidates) because no filter
+    * routed them: useBloom=false and the shard cold path. */
+  private[graft] def seenAntiJoinShuffle(seen: DataFrame,
+      suspects: DataFrame): DataFrame =
     suspects.join(seen.select(col("url_hash_hi"), col("url_hash_lo")),
       Seq("url_hash_hi", "url_hash_lo"), "left_anti")
 
-  /** J1 exact URL-seen dedup, SCAN form (default): the seen set is only ever
-    * SCANNED, never shuffled. The filter route already shrank the probe side
-    * to suspects ≈ true-dups + fpp·new — a small set by construction — so:
+  /** J1 exact URL-seen dedup, SCAN form (every filter-routed probe): the
+    * seen set is only ever SCANNED, never shuffled. The filter route already
+    * shrank the probe side to suspects ≈ true-dups + fpp·new — a small set by
+    * construction — so:
     *   (1) semi-join seen ⋉ broadcast(suspect keys): a narrow projection
     *       scan of the seen table emitting only the keys that ARE seen
     *       (≤ |suspects| rows);
@@ -173,8 +163,8 @@ object CrawlRound {
     * the asymptote a 10^10-URL seen set demands (the compacted base is read
     * with its 2-column projection pushed down; nothing wide moves). Output
     * is identical to the shuffle form (set algebra; equivalence-tested). */
-  private[graft] def seenAntiJoinScan(seen: org.apache.spark.sql.DataFrame,
-      suspects: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
+  private[graft] def seenAntiJoinScan(seen: DataFrame,
+      suspects: DataFrame): DataFrame = {
     val keys = Seq("url_hash_hi", "url_hash_lo")
     val keyCols = keys.map(col)
     val hits = seen.select(keyCols: _*)
@@ -203,12 +193,7 @@ object CrawlRound {
       .write.parquet(pending.seenDeltaPath)
     spark.emptyDataset[FetchResult].write.parquet(pending.pagesPath)
     spark.emptyDataset[LineageRow].write.parquet(pending.lineagePath)
-    if (cfg.filterKind == "cuckoo") {
-      val cf = graft.functions.CuckooFilter.create(cfg.bloomExpectedItems)
-      seeds.foreach(e => require(cf.put(e.url_hash),
-        "cuckoo filter over capacity at init — raise bloomExpectedItems"))
-      pending.writeCuckoo(cf)
-    } else if (cfg.filterShards > 0) {
+    if (cfg.filterShards > 0) {
       // sharded config: write the per-shard files directly — never allocate
       // the monolithic expectedItems-sized filter (at the 10^10 design point
       // that is ~12 GB of driver heap to index a handful of seeds). One
@@ -233,172 +218,124 @@ object CrawlRound {
       seeds.size.toLong, seeds.size.toLong, seeds.size.toLong), cfg))
   }
 
+  /** `gate` output: snapshot k's frontier, its not-due rows, and the due rows
+    * with their robots verdict and crawl delay (persisted). */
+  private final case class Gated(frontier: Dataset[FrontierEntry],
+      notDue: Dataset[FrontierEntry], withRobots: DataFrame) {
+    def frontierCols: Seq[Column] = frontier.columns.map(col).toSeq
+  }
+
+  /** `sequence` output: this round's fetch tasks, the persisted re-enqueues,
+    * and the politeness caches released at commit. */
+  private final case class Sequenced(tasks: Dataset[FetchTask],
+      deferred: Dataset[FrontierEntry], ranked: DataFrame, hostRanked: DataFrame,
+      seqParent: Dataset[FetchTask])
+
+  /** `fetch` output: the persisted fetch results, the round totals, and the
+    * already-launched pages and lineage writes. */
+  private final case class Fetched(pages: Dataset[FetchResult], n: Long,
+      errors: Long, links: Long, writes: Seq[Future[Unit]])
+
+  /** `dedup` output: the exact seen set, the persisted in-batch link
+    * candidates and truly-new links, and the previous snapshot's filter. */
+  private final case class Deduped(seen: Dataset[SeenUrl], cand: DataFrame,
+      trulyNew: DataFrame, prevBloomBytes: () => Array[Byte])
+
+  private implicit val ec: ExecutionContext = ExecutionContext.global
+
+  /** Snapshot k+1 while it is staged, plus every job future launched into it.
+    * A failure anywhere between begin and commit DRAINS those futures before
+    * dropping the tmp dir: Scala Futures are not cancellable, and aborting
+    * while a write still runs would race a retry's begin(k+1) deleting the
+    * dir under it. */
+  private final class Staging(val pending: SnapshotStore#Pending) {
+    private val launched = ArrayBuffer.empty[Future[Any]]
+    def launch[T](body: => T): Future[T] = {
+      val f = Future(scala.concurrent.blocking(body))
+      launched.synchronized { launched += f }
+      f
+    }
+    def abort(): Unit = {
+      launched.synchronized(launched.toList)
+        .foreach(f => scala.util.Try(Await.ready(f, Duration.Inf)))
+      scala.util.Try(pending.abort())
+    }
+  }
+
   /** Run round k: consume snapshot k, commit snapshot k+1. */
   def run(spark: SparkSession, store: SnapshotStore, k: Int, cfg: CrawlConfig): RoundResult = {
-    import spark.implicits._
     val rts = roundTs(cfg, k)
-    val shufflePartitions =
-      spark.conf.get("spark.sql.shuffle.partitions", "32").toInt
+    val g = gate(spark, store, k, rts)
+    val s = sequence(spark, store, k, cfg, rts, g)
+    val staging = new Staging(store.begin(k + 1))
+    try {
+      val f = fetch(spark, k, s.tasks, staging)
+      val d = dedup(spark, store, k, cfg, f.pages)
+      RoundResult(k, commit(spark, store, k, cfg, rts, staging, g, s, f, d))
+    } catch {
+      case t: Throwable =>
+        // leaving orphaned writes running into the tmp dir would race a
+        // retry's begin(k+1) deleting that dir concurrently
+        staging.abort()
+        throw t
+    }
+  }
 
+  /** F4 due filter + F2 robots gate. Robots rules come from the per-executor
+    * memoized cache keyed by host — the robots "fetch" happens at most once
+    * per (executor, host) inside the gate projection itself, so the gate has
+    * no distinct-hosts job, no driver map and no broadcast. Rules MUST come
+    * from the pinned RFC 9309 parser (over deterministic SyntheticWeb bodies,
+    * which stand in for the network), which parse_url/regex cannot express,
+    * hence the UDFs. Denied URLs are dropped for good: they stay in the seen
+    * set, so they are never re-enqueued either. Pinned behavior. */
+  private def gate(spark: SparkSession, store: SnapshotStore, k: Int,
+      rts: Long): Gated = {
+    import spark.implicits._
     // In the delta layout, loadFrontier returns a merge-on-read plan (delta
     // window + bloom route + 128-bit anti-join) that EVERY consumer of
-    // due/notDue would otherwise re-execute — robots fetch, hot-host detect,
-    // the gate count, the frontier write — multiplying the reconstruction
-    // cost per round and eroding the O(churn) win the layout buys. Persist
-    // the reconstruction for the round; unpersisted with the round caches.
+    // due/notDue would otherwise re-execute — the gate and the frontier
+    // write — multiplying the reconstruction cost per round and eroding the
+    // O(churn) win the layout buys. Persist the reconstruction for the
+    // round; unpersisted with the round caches.
     val frontierRaw = store.loadFrontier(k)
     val frontier =
       if (store.hasFullFrontier(k)) frontierRaw else frontierRaw.persist()
-    // F4 due filter — plain column predicate, pushed into the parquet scan
+    // plain column predicates, pushed into the parquet scan
     val due = frontier.filter($"next_fetch_ts" <= rts)
     val notDue = frontier.filter($"next_fetch_ts" > rts)
-
-    // J2: the robots cache, in three equivalent forms (cfg.robotsForm; crawl
-    // output identical, equivalence-tested). "fused" (default): rules are
-    // memoized per executor inside the gate projection — no robots job at
-    // all (the dedicated distinct-hosts pass was a measured ~0.7–1 s
-    // constant at every core count — pure non-scaling round fraction).
-    // "map": the classic Mercator driver-resident robots cache — one
-    // distinct-hosts job, rules compiled driver-side and broadcast (also
-    // fuses hot-host detection into the same groupBy). "join": robots bodies
-    // ride a broadcast-joined (host, body) table with executor-side memoized
-    // parsing — the ≳10^7-distinct-hosts/round form with no O(all-hosts)
-    // driver structure. All rules come from the pinned RFC 9309 parser
-    // (deterministic SyntheticWeb bodies — the only network in this sandbox).
-    val defaultDelay = cfg.crawlDelayDefaultMs
-    val (wrRaw, hotHosts, rulesBcOpt, robotsCacheOpt) = if (cfg.robotsForm == "fused") {
-      // FUSED FORM (default): rules come from a per-executor memoized cache
-      // keyed by host — the robots "fetch" happens at most once per
-      // (executor, host) inside the gate projection itself. No distinct-
-      // hosts job, no driver map, no broadcast: the robots barrier that cost
-      // the round a constant ~0.7–1 s at EVERY core count (job + collect +
-      // rules serialization) disappears from the critical path entirely.
-      // UDF justified (same rule as the other forms): rules MUST come from
-      // the pinned RFC 9309 parser, which parse_url/regex cannot express.
-      val robotsOkU = udf { (host: String, url: String) =>
-        hostRules(host).allowed(UrlCanon.pathOf(url))
-      }
-      val delayU = udf { (host: String) => hostRules(host).crawlDelayMs }
-      val wr = due
-        .withColumn("crawl_delay_ms", delayU($"host"))
-        .withColumn("robots_ok", robotsOkU($"host", $"url"))
-      (wr, Map.empty[String, Int], None, None)
-    } else if (cfg.robotsForm == "join") {
-      // SCALE FORM (≳10^7 distinct hosts/round): robots bodies ride a
-      // broadcast-joined (host, body) table — "fetched" executor-side — and
-      // rules compile lazily per executor with a memoized parse. No
-      // O(all-hosts) driver structure anywhere: the only collect is the
-      // hot-host list, O(#hosts over threshold) by definition.
-      val robotsBodyU = udf { (h: String) => SyntheticWeb.robotsBody(h) }
-      val allowedU = udf { (body: String, url: String) =>
-        Robots.cachedParse(body).allowed(UrlCanon.pathOf(url))
-      }
-      val delayU = udf { (body: String) => Robots.cachedParse(body).crawlDelayMs }
-      // persist + count so the trace measures the actual robots "fetch"
-      // (body generation over distinct hosts) instead of timing a lazy plan
-      // at ~0s and misattributing the cost to a downstream stage
-      val robotsDf = traced("robots-fetch") {
-        val df = due.select($"host").distinct()
-          .withColumn("robots_body", robotsBodyU($"host")).persist()
-        df.count()
-        df
-      }
-      // F2 robots gate — denied URLs are dropped for good (they stay in the
-      // seen set, so they are never re-enqueued either). Pinned behavior.
-      val wr = due.join(broadcast(robotsDf), Seq("host"))
-        .withColumn("crawl_delay_ms", delayU($"robots_body"))
-        .withColumn("robots_ok", allowedU($"robots_body", $"url"))
-        .drop("robots_body")
-      // saltAllHosts makes hot-host DETECTION moot (everything is salted),
-      // so the counts job is skipped — one less pre-fetch barrier
-      val hot: Map[String, Int] =
-        if (cfg.saltAllHosts) Map.empty
-        else traced("hot-hosts")(
-          due.groupBy($"host").count()
-            .filter($"count" > cfg.hotHostThreshold)
-            .select($"host").as[String].collect()
-            .map(h => h -> cfg.saltBuckets).toMap)
-      (wr, hot, None, Some(robotsDf))
-    } else {
-      // MAP FORM (the driver-resident Mercator robots cache): one job serves two
-      // driver maps — distinct due hosts (rules, compiled driver-side and
-      // broadcast) and per-host due counts (hot-host detection).
-      val dueHostCounts: Map[String, Long] =
-        traced("robots-fetch")(due.groupBy($"host").count()
-          .as[(String, Long)].collect().toMap)
-      val hostRules: Map[String, Robots.Rules] =
-        dueHostCounts.keysIterator.map(h => h -> SyntheticWeb.robotsFor(h)).toMap
-      val rulesBc = spark.sparkContext.broadcast(hostRules)
-      val robotsOk = udf { (host: String, url: String) =>
-        rulesBc.value.get(host).forall(_.allowed(UrlCanon.pathOf(url)))
-      }
-      val delayOf = udf { (host: String) =>
-        rulesBc.value.get(host).map(_.crawlDelayMs).getOrElse(defaultDelay)
-      }
-      // F2 robots gate — denied URLs are dropped for good (they stay in the
-      // seen set, so they are never re-enqueued either). Pinned behavior.
-      val wr = due
-        .withColumn("crawl_delay_ms", delayOf($"host"))
-        .withColumn("robots_ok", robotsOk($"host", $"url"))
-      val hot: Map[String, Int] = traced("hot-hosts")(
-        dueHostCounts.iterator
-          .filter { case (_, n) => n > cfg.hotHostThreshold }
-          .map { case (h, _) => h -> cfg.saltBuckets }.toMap)
-      (wr, hot, Some(rulesBc), None)
+    val robotsOkU = udf { (host: String, url: String) =>
+      hostRules(host).allowed(UrlCanon.pathOf(url))
     }
-    // Gate counts ride as OBSERVED metrics on the first job that
-    // materializes withRobots (the politeness/sequence pass) instead of a
-    // dedicated agg job — that barrier was a measured non-scaling slice of
-    // the round at every core count. Observation metrics are collected by
-    // the first action over the plan (the observe node sits under the
-    // persist, so exactly one full scan feeds it); the values are read at
-    // metrics time, long after that action completed.
-    val gateObs = org.apache.spark.sql.Observation()
-    val withRobots = wrRaw
-      .observe(gateObs, count(lit(1)).as("n_due"),
-        // coalesce: sum over an empty gate is NULL, not 0
-        coalesce(sum(when($"robots_ok", 1L).otherwise(0L)), lit(0L))
-          .as("n_allowed"))
+    val delayU = udf { (host: String) => hostRules(host).crawlDelayMs }
+    val withRobots = due
+      .withColumn("crawl_delay_ms", delayU($"host"))
+      .withColumn("robots_ok", robotsOkU($"host", $"url"))
       .persist()
-    val allowed = withRobots.filter($"robots_ok")
+    Gated(frontier, notDue, withRobots)
+  }
 
-    // --- politeness (W1/W2 + §4.3 two-phase salted top-k for hot hosts) ----
+  /** Politeness and sequencing over the allowed rows: W1/W2 per-host
+    * top-budget via the §4.3 two-phase salted top-k, the opt-in adaptive
+    * backoff, the W2 fetch_ts schedule, the §8.3 global round sequence and
+    * the O3 round cap. Everything over budget or cap is re-enqueued (§8.5). */
+  private def sequence(spark: SparkSession, store: SnapshotStore, k: Int,
+      cfg: CrawlConfig, rts: Long, g: Gated): Sequenced = {
+    import spark.implicits._
+    val allowed = g.withRobots.filter($"robots_ok")
     val ord: Seq[Column] =
       Seq($"priority".desc, $"next_fetch_ts".asc, $"url_hash".asc)
-    // hot-host detection keys off DUE counts (due ≥ allowed, so this can
-    // only salt MORE hosts than allowed-counts would — salting is
-    // semantics-neutral by the phase-1 keep-proof below, and the
-    // salted==unsalted equivalence test pins that)
-    val (phase1Kept, phase1Dropped, phase1CacheOpt) =
-      if (!cfg.saltAllHosts && hotHosts.isEmpty)
-        (allowed, allowed.limit(0), None)
-      else {
-        // saltAllHosts (default): salt is a codegen pmod column — no UDF, no
-        // broadcast map — and pmod(h, B) == floorMod(h, B) for the same B,
-        // so the buckets match what hot-host detection would have produced.
-        // The keep-proof below makes salting semantics-neutral for EVERY
-        // host (cold hosts simply never overflow a bucket's top-budget), so
-        // salting unconditionally trades a per-host counts barrier for zero
-        // output change.
-        val saltCol =
-          if (cfg.saltAllHosts)
-            pmod($"url_hash", lit(cfg.saltBuckets.toLong)).cast("int")
-          else {
-            val hot = spark.sparkContext.broadcast(hotHosts)
-            val saltOf = udf { (host: String, h: Long) =>
-              hot.value.get(host).map(b => math.floorMod(h, b.toLong).toInt).getOrElse(0)
-            }
-            saltOf($"host", $"url_hash")
-          }
-        val salted = allowed.withColumn("salt", saltCol)
-        val w1 = Window.partitionBy($"host", $"salt").orderBy(ord: _*)
-        val ranked = salted.withColumn("srank", row_number().over(w1)).persist()
-        // any row in a host's true top-budget is in its salt bucket's local
-        // top-budget, so phase 1 never drops a row phase 2 would keep
-        (ranked.filter($"srank" <= cfg.hostBudget).drop("salt", "srank"),
-          ranked.filter($"srank" > cfg.hostBudget).drop("salt", "srank"),
-          Some(ranked))
-      }
+    // phase 1: top-budget per (host, salt), the salt a codegen pmod column —
+    // no UDF, no broadcast map. Any row in a host's true top-budget is in
+    // its salt bucket's local top-budget, so phase 1 never drops a row phase
+    // 2 would keep: salting is semantics-neutral for EVERY host, and cold
+    // hosts simply never overflow a bucket (saltBuckets = 1 is unsalted).
+    val salted = allowed.withColumn("salt",
+      pmod($"url_hash", lit(cfg.saltBuckets.toLong)).cast("int"))
+    val w1 = Window.partitionBy($"host", $"salt").orderBy(ord: _*)
+    val ranked = salted.withColumn("srank", row_number().over(w1)).persist()
+    val phase1Kept = ranked.filter($"srank" <= cfg.hostBudget).drop("salt", "srank")
+    val phase1Dropped = ranked.filter($"srank" > cfg.hostBudget).drop("salt", "srank")
     val w2 = Window.partitionBy($"host").orderBy(ord: _*)
     val hostRanked = phase1Kept.withColumn("host_rank", row_number().over(w2)).persist()
     // opt-in adaptive backoff: hosts over the error-rate threshold in the
@@ -409,7 +346,7 @@ object CrawlRound {
     // every init path writes a (possibly empty) pages table, so a missing
     // dir is the only no-signal case — any other failure (corrupt parquet,
     // schema drift) must propagate, not silently disable the backoff
-    val backoffHosts: Option[org.apache.spark.sql.DataFrame] =
+    val backoffHosts: Option[DataFrame] =
       if (!cfg.adaptiveBackoff ||
           !java.nio.file.Files.exists(java.nio.file.Paths.get(store.pagesPath(k))))
         None
@@ -434,7 +371,6 @@ object CrawlRound {
           withB.filter($"host_rank" > $"eff_budget").drop("eff_budget"))
     }
 
-    // W2 schedule + O3 round cap + §8.3 global sequence over gated rows
     val preTasks = budgetKept
       .withColumn("fetch_ts", lit(rts) + ($"host_rank" - 1) * $"crawl_delay_ms")
       .withColumn("seq", lit(-1L))
@@ -442,21 +378,16 @@ object CrawlRound {
         $"priority", $"next_fetch_ts", $"discovered_round", $"retries",
         $"host_rank", $"seq", $"fetch_ts")
       .as[FetchTask]
-    // cfg.fetchWaves: `sequenced`'s range partitions become the fetch
-    // mapPartitions tasks (75%+ of round wall); at exactly one task per core
-    // a single straggler extends the whole stage. >1 packs stragglers across
-    // waves at the cost of more tasks/files downstream (fetched cache, page
-    // writes). Output is byte-identical at any value (unique sort keys →
-    // same global order). Default 1; tools.WaveAB measures the trade.
+    // `sequenced`'s range partitions become the fetch tasks: one per shuffle
+    // partition (more tasks per core measured slower at local[16])
     val (sequenced, seqParent) =
-      assignGlobalSeq(spark, preTasks,
-        shufflePartitions * math.max(cfg.fetchWaves, 1))
+      assignGlobalSeq(spark, preTasks, shufflePartitions(spark))
     val tasks = sequenced.filter($"seq" < cfg.roundCap)
     val capDropped = sequenced.filter($"seq" >= cfg.roundCap)
 
-    // §8.5 re-enqueue: deferred = over-salt ∪ over-budget ∪ over-cap; bumped
-    // past this round's schedule window, priority decayed by 1 (floor 0)
-    val frontierCols = frontier.columns.map(col).toSeq
+    // deferred = over-salt ∪ over-budget ∪ over-cap; bumped past this round's
+    // schedule window, priority decayed by 1 (floor 0)
+    val frontierCols = g.frontierCols
     val deferred = phase1Dropped.select(frontierCols: _*)
       .unionByName(budgetDropped.select(frontierCols: _*))
       .unionByName(capDropped.toDF().select(frontierCols: _*))
@@ -464,8 +395,20 @@ object CrawlRound {
       .withColumn("priority", greatest($"priority" - 1, lit(0)))
       .withColumn("retries", $"retries" + 1)
       .as[FrontierEntry].persist()
+    Sequenced(tasks, deferred, ranked, hostRanked, seqParent)
+  }
 
-    // --- fetch/parse (executor-local; html never leaves this stage) --------
+  /** Fetch/parse, executor-local: html never leaves this stage. Then the two
+    * snapshot outputs that depend ONLY on the fetch results (pages, lineage)
+    * start writing at once, overlapped with dedup. Motivation (round-3
+    * job-timeline trace): the write phase measured as a ~6.4 s wall CONSTANT
+    * at both local[4] and local[16] — per-task/per-file fixed costs, not data
+    * volume — i.e. pure non-scaling serial fraction. Overlapping these writes
+    * with real work removes that wall from both levels. Lineage coalesces to
+    * one task: it is O(partitions) rows and was paying a 16-task write. */
+  private def fetch(spark: SparkSession, k: Int, tasks: Dataset[FetchTask],
+      staging: Staging): Fetched = {
+    import spark.implicits._
     val round = k
     val fetched: Dataset[FetchResult] = tasks.mapPartitions { it =>
       it.map { t =>
@@ -491,45 +434,26 @@ object CrawlRound {
           sum(when($"status" =!= 200, 1L).otherwise(0L)).as("errors"),
           coalesce(sum(size($"links")), lit(0L)).as("links"))
         .as[(Int, Long, Long, Long)].collect())
-    val nFetched = partStats.map(_._2).sum
-    val nErrors = partStats.map(_._3).sum
-    val nLinks = partStats.map(_._4).sum
     val lineageRows: Seq[LineageRow] = partStats.sortBy(_._1).toSeq
       .map { case (pid, nRows, errs, _) =>
         LineageRow(k, "fetch_parse", pid, nRows, nRows, errs, 0L) }
+    val writes = Seq(
+      staging.launch(traced("write-pages")(
+        fetched.write.parquet(staging.pending.pagesPath))),
+      staging.launch(traced("write-lineage")(spark.createDataset(lineageRows)
+        .coalesce(1).write.parquet(staging.pending.lineagePath))))
+    Fetched(fetched, partStats.map(_._2).sum, partStats.map(_._3).sum,
+      partStats.map(_._4).sum, writes)
+  }
 
-    // Snapshot staging opens HERE, and the two outputs that depend ONLY on
-    // `fetched` (pages, lineage) start writing immediately, overlapped with
-    // the link/dedup chain below. Motivation (round-3 job-timeline trace):
-    // the write phase measured as a ~6.4 s wall CONSTANT at both local[4]
-    // and local[16] — per-task/per-file fixed costs, not data volume — i.e.
-    // pure non-scaling serial fraction. Overlapping the fetched-only writes
-    // with real work removes that wall from both levels. Outputs unchanged;
-    // only job start times move. Lineage coalesces to one task: it is
-    // O(partitions) rows and was paying a 16-task write.
-    import scala.concurrent.{Await, ExecutionContext, Future}
-    import scala.concurrent.duration.Duration
-    implicit val ec: ExecutionContext = ExecutionContext.global
-    // every write future is tracked so a failure anywhere between begin and
-    // commit can DRAIN them before dropping the tmp dir (Scala Futures are
-    // not cancellable; aborting while a write still runs would race a
-    // retry's begin(k+1) deleting the dir under it)
-    val launched = scala.collection.mutable.ArrayBuffer.empty[Future[Unit]]
-    def fut(body: => Unit): Future[Unit] = {
-      val f = Future(scala.concurrent.blocking(body))
-      launched.synchronized { launched += f }
-      f
-    }
-    val pending = store.begin(k + 1)
-    try {
-    val earlyOutputs = Seq(
-      fut(traced("write-pages")(fetched.write.parquet(pending.pagesPath))),
-      // O(partitions) rows, already computed driver-side by the fetch agg
-      fut(traced("write-lineage")(spark.createDataset(lineageRows).coalesce(1)
-        .write.parquet(pending.lineagePath))))
-
-    // --- link candidates: canonical (LinkExtract) + hash + in-batch merge ---
-    val cand = fetched.filter($"status" === 200)
+  /** Link dedup: canonical link candidates (LinkExtract) hashed and merged
+    * in-batch, then the URL-seen filter route (A3) + exact anti-join (J1).
+    * Filter-clear ⇒ definitely new (no false negatives) ⇒ skips the join;
+    * filter-hit ⇒ maybe seen ⇒ exact anti-join. */
+  private def dedup(spark: SparkSession, store: SnapshotStore, k: Int,
+      cfg: CrawlConfig, pages: Dataset[FetchResult]): Deduped = {
+    import spark.implicits._
+    val cand = pages.filter($"status" === 200)
       .flatMap(r => r.links.map(l => (l, childPriority(r.priority))))
       .map { case (u, p) =>
         val (hi, lo) = Hashes.murmur128(u)
@@ -542,136 +466,77 @@ object CrawlRound {
       .agg(min($"url").as("url"), min($"url_hash").as("url_hash"),
         min($"host").as("host"), max($"priority").as("priority"))
       .persist()
-    // nCand is read AFTER the seen-dedup action below: the dedup job's first
-    // scan of `cand` populates the cache (the flatMap + in-batch-merge
-    // shuffle runs exactly once either way), so counting here first would
-    // add a whole extra job barrier just to materialize — a measured slice
-    // of the round's non-scaling serial fraction
+    // cand is counted at commit, AFTER the seen-dedup jobs: their first scan
+    // of `cand` populates the cache (the flatMap + in-batch-merge shuffle
+    // runs exactly once either way), so counting here first would add a
+    // whole extra job barrier just to materialize — a measured slice of the
+    // round's non-scaling serial fraction
 
-    // --- dedup vs URL-seen: filter route (A3) + exact anti-join (J1) -------
-    // filter-clear ⇒ definitely new (no false negatives) ⇒ skip the shuffle;
-    // filter-hit ⇒ maybe seen ⇒ exact anti-join. Same contract for bloom
-    // (built-in) and cuckoo (graft TypedImperativeAggregate, deletable).
-    //
     // Cumulative filter: loaded from snapshot k, or — cold path, filter file
     // lost — rebuilt DISTRIBUTED from the exact seen set (xxh64(url)
-    // recomputed executor-side, aggregated via stat.bloomFilter / CuckooAgg).
-    // Never streamed through the driver: at the 10^10-URL design point a
+    // recomputed executor-side, aggregated via stat.bloomFilter). Never
+    // streamed through the driver: at the 10^10-URL design point a
     // driver-side iteration of the seen set would bottleneck exactly the
     // recovery path that matters. Kept as BYTES so the probe broadcast and
     // the persist-path merge each deserialize a private instance (merge
     // mutates; the broadcast copy must stay immutable).
     val seen = store.loadSeen(k)
-    lazy val prevCuckooBytes: Array[Byte] =
-      store.loadCuckoo(k).map(_.serialized).getOrElse(
-        traced("cuckoo-cold-rebuild")(
-          cuckooOfUrls(seen.toDF(), cfg.bloomExpectedItems).serialized))
     lazy val prevBloomBytes: Array[Byte] =
       store.loadBloom(k).map(bloomBytes).getOrElse(
         traced("bloom-cold-rebuild")(bloomBytes(
           bloomOfUrls(seen.toDF(), cfg.bloomExpectedItems, cfg.bloomFpp))))
-    // filterShards > 0 (bloom kind): the cumulative filter is SHARDED by
-    // pmod(url_hash, n) — candidates route to their shard's partition and
-    // probe a partition-local filter, so per-executor filter memory is
-    // O(total/n) instead of the whole (≈12 GB at 10^10 keys, 1% fpp —
-    // unbroadcastable). Exactness backstop unchanged.
-    val sharded =
-      cfg.useBloom && cfg.filterKind == "bloom" && cfg.filterShards > 0
+    // filterShards > 0: the cumulative filter is SHARDED by pmod(url_hash, n)
+    // — candidates route to their shard's partition and probe a
+    // partition-local filter, so per-executor filter memory is O(total/n)
+    // instead of the whole (≈12 GB at 10^10 keys, 1% fpp — unbroadcastable).
+    // Exactness backstop unchanged.
+    val sharded = cfg.useBloom && cfg.filterShards > 0
     val probeOpt: Option[org.apache.spark.sql.expressions.UserDefinedFunction] =
       if (!cfg.useBloom || sharded) None
-      else if (cfg.filterKind == "cuckoo") {
-        val bc = spark.sparkContext.broadcast(
-          graft.functions.CuckooFilter.deserialize(prevCuckooBytes))
-        Some(udf((h: Long) => bc.value.mightContain(h)))
-      } else {
+      else {
         val bfb = spark.sparkContext.broadcast(bloomOf(prevBloomBytes))
         Some(udf((h: Long) => bfb.value.mightContainLong(h)))
       }
-    // `filtered = true` marks a SUSPECT set (bloom/cuckoo/shard hits — a
-    // small fraction of candidates by construction), which unlocks the
-    // scan-form join; unfiltered inputs (useBloom=false, shard cold path)
-    // are O(candidates) and stay on the shuffle form regardless of config.
-    def antiJoinAll(df: org.apache.spark.sql.DataFrame, filtered: Boolean) =
-      if (filtered && cfg.seenJoin == "scan") seenAntiJoinScan(seen.toDF(), df)
-      else seenAntiJoinShuffle(seen.toDF(), df)
+    // Filter hits are a SUSPECT set (a small fraction of candidates by
+    // construction) and take the scan-form join; unfiltered probes
+    // (useBloom=false, shard cold path) are O(candidates) and take the
+    // shuffle form.
     val trulyNew =
       (if (sharded && store.filterShardsExist(k, cfg.filterShards)) {
         val flagged = shardProbe(spark, store, k, cand, cfg)
         val suspects = flagged.filter($"maybe_seen").drop("maybe_seen")
         val definitelyNew = flagged.filter(!$"maybe_seen").drop("maybe_seen")
-        antiJoinAll(suspects, filtered = true).unionByName(definitelyNew)
-      } else if (sharded) {
-        // cold path (shard files absent — e.g. round 0, whose snapshot only
-        // carries the monolithic init filter): exact anti-join this round;
-        // the lifecycle below writes the full shard set for snapshot k+1
-        antiJoinAll(cand, filtered = false)
+        seenAntiJoinScan(seen.toDF(), suspects).unionByName(definitelyNew)
       } else probeOpt match {
         case Some(mightContain) =>
           val suspects = cand.filter(mightContain($"url_hash"))
           val definitelyNew = cand.filter(!mightContain($"url_hash"))
-          antiJoinAll(suspects, filtered = true).unionByName(definitelyNew)
+          seenAntiJoinScan(seen.toDF(), suspects).unionByName(definitelyNew)
+        // no filter, or the sharded cold path (shard files absent — e.g.
+        // round 0, whose snapshot only carries the monolithic init filter):
+        // exact anti-join this round; writeFilter then writes the full shard
+        // set for snapshot k+1
         case None =>
-          antiJoinAll(cand, filtered = false)
-      // n_new is counted AFTER the writes from the populated cache (like
-      // nCand below), NOT via an Observation here: the first actions over
-      // trulyNew are THREE concurrent write jobs racing to materialize the
-      // cache, and Observation snapshots its metrics when the FIRST of them
-      // completes — accumulator updates from another job's still-running
-      // tasks would be missing, silently undercounting n_new (and with it
-      // the frontier/seen manifest arithmetic every later round inherits).
+          seenAntiJoinShuffle(seen.toDF(), cand)
+      // n_new is counted at commit from the populated cache (like cand),
+      // NOT via an Observation here: the first actions over trulyNew are
+      // THREE concurrent write jobs racing to materialize the cache, and
+      // Observation snapshots its metrics when the FIRST of them completes —
+      // accumulator updates from another job's still-running tasks would be
+      // missing, silently undercounting n_new (and with it the frontier/seen
+      // manifest arithmetic every later round inherits).
       }).persist()
+    Deduped(seen, cand, trulyNew, () => prevBloomBytes)
+  }
 
-    val newEntries = trulyNew.select(
-        $"url", $"url_hash", $"url_hash_hi", $"url_hash_lo", $"host", $"priority",
-        lit(rts).as("next_fetch_ts"), lit(k + 1).as("discovered_round"),
-        lit(0).as("retries"))
-      .as[FrontierEntry]
-
-    // U1: the three parts are disjoint by construction (new ⟂ seen ⊇ frontier;
-    // notDue ⟂ deferred by the due filter) — plain union, no merge shuffle.
-    // Persisted because the range write needs two passes (boundary sampling +
-    // the shuffle itself) and must not recompute the union branches.
-    // Delta mode skips the persist: the full union is only consumed on the
-    // rare fallback count — caching 10^10 rows for that would defeat the
-    // point of the log-structured layout.
-    val deltaMode = cfg.frontierDeltas && {
-      if (cfg.compactFrontierChurnRatio > 0) {
-        // churn-driven cadence: delta while Σ delta rows since the last full
-        // base < ratio × base size, else compact. Chain churn comes from the
-        // manifests already on disk (snapshot r's manifest holds round r-1's
-        // metrics; its delta rows = deferred + new upserts + fetched +
-        // denied removals) — no jobs, O(chain length) driver string parses.
-        val base = (k to 0 by -1).find(store.hasFullFrontier)
-        val baseSize = base.flatMap(b => manifestField(store, b, "frontier_size"))
-        val chainChurn = base.map { b =>
-          ((b + 1) to k).map { r =>
-            Seq("deferred", "new_urls", "fetched", "robots_denied")
-              .map(f => manifestField(store, r, f).getOrElse(0L)).sum
-          }.sum
-        }.getOrElse(0L)
-        baseSize match {
-          case Some(bs) => chainChurn < (cfg.compactFrontierChurnRatio * bs).toLong
-          case None => (k + 1) % math.max(cfg.compactFrontierEvery, 1) != 0
-        }
-      } else (k + 1) % math.max(cfg.compactFrontierEvery, 1) != 0
-    }
-    val nextFrontier =
-      if (deltaMode) notDue.unionByName(deferred).unionByName(newEntries)
-      else notDue.unionByName(deferred).unionByName(newEntries).persist()
-
-    // --- commit snapshot k+1 ------------------------------------------------
-    // The remaining snapshot outputs (frontier / seen delta / compaction /
-    // filter) are INDEPENDENT targets over already-cached inputs and run as
-    // CONCURRENT Spark jobs (pages + lineage are already in flight above).
-    val newSeen = trulyNew.select($"url_hash_hi", $"url_hash_lo", $"url",
-      lit(k + 1).as("first_seen_round")).as[SeenUrl]
-
-    // A3 filter lifecycle: merge this round's new hashes into the running
-    // filter (a fresh instance off prev*Bytes — never the broadcast probe
-    // copy, which merge would mutate). Coalesce before the aggregate: each
-    // input partition produces a partial filter of the FULL table size, so
-    // fan-in = serialized megabytes.
-    def writeFilter(): Unit = if (sharded) {
+  /** A3 filter lifecycle: merge this round's new hashes into the running
+    * filter (a fresh instance off prevBloomBytes — never the broadcast probe
+    * copy, which merge would mutate) and stage it for snapshot k+1. */
+  private def writeFilter(spark: SparkSession, store: SnapshotStore, k: Int,
+      cfg: CrawlConfig, d: Deduped, newSeen: Dataset[SeenUrl],
+      pending: SnapshotStore#Pending): Unit = {
+    import spark.implicits._
+    if (cfg.useBloom && cfg.filterShards > 0) {
       // sharded bloom lifecycle: per-shard delta blooms in ONE distributed
       // groupBy aggregation (BloomAgg — stat.bloomFilter cannot group), then
       // each TASK merges its shard(s) with the previous snapshot's shard
@@ -686,8 +551,8 @@ object CrawlRound {
       val (perShard, numBits) = shardSizing(spark, cfg)
       val havePrev = store.filterShardsExist(k, n)
       val src =
-        if (havePrev) trulyNew.select($"url_hash")
-        else seen.toDF().unionByName(newSeen.toDF())
+        if (havePrev) d.trulyNew.select($"url_hash")
+        else d.seen.toDF().unionByName(newSeen.toDF())
           .select(xxh64OfUrl($"url").as("url_hash"))
       val outDir = pending.filterShardsDir
       val prevPaths: Array[String] =
@@ -730,27 +595,6 @@ object CrawlRound {
               bloomBytes(BloomFilter.create(perShard, numBits)))
         }
       }
-    } else if (cfg.filterKind == "cuckoo") {
-      val merged = graft.functions.CuckooFilter.deserialize(prevCuckooBytes)
-      // delta shape is pinned to the (possibly regrown) prev filter's bucket
-      // count — cuckoo merge requires identical shapes
-      val deltaBytes = traced("cuckoo-build")(trulyNew.select($"url_hash").coalesce(4)
-        .select(org.apache.spark.sql.graftexpr.CuckooAgg($"url_hash",
-          cfg.bloomExpectedItems, merged.numBuckets).as("cf"))
-        .head().getAs[Array[Byte]](0))
-      merged.mergeInPlace(graft.functions.CuckooFilter.deserialize(deltaBytes))
-      // exactness contract: a cuckoo filter over capacity DROPS keys, which
-      // would turn "filter-clear ⇒ definitely new" into silent re-crawls
-      // (bloom degrades safely via fpp; cuckoo fails unsafely). Any drop —
-      // in the delta build, the prev filter, or this merge — triggers a
-      // distributed rebuild from the exact seen ∪ new set at doubled
-      // capacity (cuckooOfUrls doubles until clean).
-      val cf =
-        if (merged.failedInserts == 0) merged
-        else traced("cuckoo-regrow")(cuckooOfUrls(
-          seen.toDF().unionByName(newSeen.toDF()),
-          math.max(cfg.bloomExpectedItems, merged.numBuckets.toLong * 4) * 2))
-      pending.writeCuckoo(cf)
     } else {
       // same (expectedItems, fpp) as the persistent filter — mergeInPlace
       // requires identical bit-array sizes. Fan-in: every scan partition
@@ -761,109 +605,139 @@ object CrawlRound {
       // count is the cap anyway). 16 partials × ~10 MB (1% fpp, 2^23 items)
       // sit well inside driver headroom; at filter sizes where 16 partials
       // would not, the sharded path is the right config, not a tighter cap.
-      val fanIn = math.max(1, math.min(shufflePartitions, 16))
-      val deltaBloom = traced("bloom-build")(trulyNew.select($"url_hash")
+      val fanIn = math.max(1, math.min(shufflePartitions(spark), 16))
+      val deltaBloom = traced("bloom-build")(d.trulyNew.select($"url_hash")
         .coalesce(fanIn)
         .stat.bloomFilter("url_hash", cfg.bloomExpectedItems, cfg.bloomFpp))
-      val prevBloom = bloomOf(prevBloomBytes)
+      val prevBloom = bloomOf(d.prevBloomBytes())
       prevBloom.mergeInPlace(deltaBloom)
       pending.writeBloom(prevBloom)
     }
+  }
 
-    val (nNewF, nCandF) = {
-      val outputs = earlyOutputs ++ Seq(
-        fut((traced("write-frontier")(
-          if (deltaMode) {
-            // churn only: upserts (deferred + newly discovered) and removals
-            // (fetched this round + robots-denied). Each url appears at most
-            // once (the sets are disjoint); no range shuffle — the full
-            // rewrite happens on compaction rounds.
-            val upserts = deferred.toDF().select(frontierCols: _*)
-              .unionByName(newEntries.toDF().select(frontierCols: _*))
-              .withColumn("op", lit("u"))
-            val removals = tasks.toDF().select(frontierCols: _*)
-              .unionByName(withRobots.filter(!$"robots_ok")
-                .select(frontierCols: _*))
-              .withColumn("op", lit("r"))
-            upserts.unionByName(removals).write.parquet(pending.frontierDeltaPath)
-          } else orderedFrontierWrite(nextFrontier, pending.frontierPath)))),
-        fut((traced("write-seen")(
-          newSeen.write.parquet(pending.seenDeltaPath)))),
-        fut(writeFilter())) ++
-        // periodic compaction: materialize the whole seen set hash-partitioned,
-        // so loadSeen reads one clustered base + a few deltas (SURVEY.md §4.2)
-        (if (cfg.compactSeenEvery > 0 && (k + 1) % cfg.compactSeenEvery == 0)
-          Seq(fut((traced("compact-seen")(
-            seen.unionByName(newSeen)
-              .repartition(math.max(shufflePartitions, 1), $"url_hash_hi")
-              .write.parquet(pending.seenFullPath)))))
-        else Nil)
-      // The two manifest counts launch WITH the write jobs instead of after
-      // them: FIFO queues their single-stage cached scans behind the write
-      // tasks, so they complete inside the write wall instead of adding a
-      // measured ~0.7–1 s serial tail AFTER it — a constant slice at every
-      // core count. Unlike an Observation (see n_new's history above), a
-      // count is exact no matter which concurrent job materializes the
-      // cache first: whichever task computes a partition does so once under
-      // the block lock, and every later reader sees the cached rows.
-      val nNewFut = Future(scala.concurrent.blocking(
-        traced("n-new")(trulyNew.count())))
-      val nCandFut = Future(scala.concurrent.blocking(
-        traced("link-candidates")(cand.count())))
-      launched.synchronized {
-        launched += nNewFut.map(_ => ())
-        launched += nCandFut.map(_ => ())
-      }
-      Await.result(Future.sequence(outputs), Duration.Inf)
-      (nNewFut, nCandFut)
+  /** Commit snapshot k+1. The remaining outputs (frontier, seen delta,
+    * filter, periodic seen compaction) are INDEPENDENT targets over
+    * already-cached inputs and run as CONCURRENT Spark jobs beside the
+    * pages/lineage writes already in flight; the manifest is written last. */
+  private def commit(spark: SparkSession, store: SnapshotStore, k: Int,
+      cfg: CrawlConfig, rts: Long, staging: Staging, g: Gated, s: Sequenced,
+      f: Fetched, d: Deduped): RoundMetrics = {
+    import spark.implicits._
+    val pending = staging.pending
+    val newEntries = d.trulyNew.select(
+        $"url", $"url_hash", $"url_hash_hi", $"url_hash_lo", $"host", $"priority",
+        lit(rts).as("next_fetch_ts"), lit(k + 1).as("discovered_round"),
+        lit(0).as("retries"))
+      .as[FrontierEntry]
+
+    // U1: the three parts are disjoint by construction (new ⟂ seen ⊇ frontier;
+    // notDue ⟂ deferred by the due filter) — plain union, no merge shuffle.
+    // Persisted because the range write needs two passes (boundary sampling +
+    // the shuffle itself) and must not recompute the union branches.
+    // Delta mode skips the persist: the full union is only consumed on the
+    // rare fallback count — caching 10^10 rows for that would defeat the
+    // point of the log-structured layout.
+    val deltaMode = cfg.frontierDeltas && {
+      if (cfg.compactFrontierChurnRatio > 0) {
+        // churn-driven cadence: delta while Σ delta rows since the last full
+        // base < ratio × base size, else compact. Chain churn comes from the
+        // manifests already on disk (snapshot r's manifest holds round r-1's
+        // metrics; its delta rows = deferred + new upserts + fetched +
+        // denied removals) — no jobs, O(chain length) driver string parses.
+        val base = (k to 0 by -1).find(store.hasFullFrontier)
+        val baseSize = base.flatMap(b => manifestField(store, b, "frontier_size"))
+        val chainChurn = base.map { b =>
+          ((b + 1) to k).map { r =>
+            Seq("deferred", "new_urls", "fetched", "robots_denied")
+              .map(field => manifestField(store, r, field).getOrElse(0L)).sum
+          }.sum
+        }.getOrElse(0L)
+        baseSize match {
+          case Some(bs) => chainChurn < (cfg.compactFrontierChurnRatio * bs).toLong
+          case None => (k + 1) % math.max(cfg.compactFrontierEvery, 1) != 0
+        }
+      } else (k + 1) % math.max(cfg.compactFrontierEvery, 1) != 0
     }
+    val nextFrontier =
+      if (deltaMode) g.notDue.unionByName(s.deferred).unionByName(newEntries)
+      else g.notDue.unionByName(s.deferred).unionByName(newEntries).persist()
+    val newSeen = d.trulyNew.select($"url_hash_hi", $"url_hash_lo", $"url",
+      lit(k + 1).as("first_seen_round")).as[SeenUrl]
 
-    // The gate observation is sound because EXACTLY ONE job materializes the
-    // withRobots cache (the synchronous politeness/sequence pass, which
-    // completes before any other consumer runs) — unlike trulyNew, whose
-    // cache is raced by three concurrent writers, so its count comes from a
-    // plain count job launched alongside the writes (exact regardless of
-    // which job materializes the cache — see the staging block).
-    val gateRow = gateObs.get
-    val nDue = gateRow("n_due").asInstanceOf[Long]
-    val nAllowed = gateRow("n_allowed").asInstanceOf[Long]
-    val robotsDenied = nDue - nAllowed
-    // counts were launched alongside the write jobs (see the staging block)
-    // and are usually already complete by the time the writes drain
+    val writes = f.writes ++ Seq(
+      staging.launch(traced("write-frontier")(
+        if (deltaMode) {
+          // churn only: upserts (deferred + newly discovered) and removals
+          // (fetched this round + robots-denied). Each url appears at most
+          // once (the sets are disjoint); no range shuffle — the full
+          // rewrite happens on compaction rounds.
+          val frontierCols = g.frontierCols
+          val upserts = s.deferred.toDF().select(frontierCols: _*)
+            .unionByName(newEntries.toDF().select(frontierCols: _*))
+            .withColumn("op", lit("u"))
+          val removals = s.tasks.toDF().select(frontierCols: _*)
+            .unionByName(g.withRobots.filter(!$"robots_ok")
+              .select(frontierCols: _*))
+            .withColumn("op", lit("r"))
+          upserts.unionByName(removals).write.parquet(pending.frontierDeltaPath)
+        } else orderedFrontierWrite(nextFrontier, pending.frontierPath))),
+      staging.launch(traced("write-seen")(
+        newSeen.write.parquet(pending.seenDeltaPath))),
+      staging.launch(writeFilter(spark, store, k, cfg, d, newSeen, pending))) ++
+      // periodic compaction: materialize the whole seen set hash-partitioned,
+      // so loadSeen reads one clustered base + a few deltas (SURVEY.md §4.2)
+      (if (cfg.compactSeenEvery > 0 && (k + 1) % cfg.compactSeenEvery == 0)
+        Seq(staging.launch(traced("compact-seen")(
+          d.seen.unionByName(newSeen)
+            .repartition(math.max(shufflePartitions(spark), 1), $"url_hash_hi")
+            .write.parquet(pending.seenFullPath))))
+      else Nil)
+    // The manifest counts launch WITH the write jobs instead of after them:
+    // FIFO queues their single-stage cached scans behind the write tasks, so
+    // they complete inside the write wall instead of adding a measured
+    // ~0.7–1 s serial tail AFTER it — a constant slice at every core count.
+    // Unlike an Observation (see n_new's note in dedup), a count is exact no
+    // matter which concurrent job materializes the cache first: whichever
+    // task computes a partition does so once under the block lock, and every
+    // later reader sees the cached rows.
+    val nNewF = staging.launch(traced("n-new")(d.trulyNew.count()))
+    val nCandF = staging.launch(traced("link-candidates")(d.cand.count()))
+    // The gate counts too: an Observation on withRobots is fulfilled by the
+    // FIRST action whose plan contains it, whether or not that action ran
+    // the plan. The politeness pass's `Dataset.rdd` is such an action, and
+    // with one shuffle partition and AQE off no job has run by then (no
+    // range sampling, no eager stage), so due and robots_denied read 0.
+    val gateF = staging.launch(traced("gate-counts")(g.withRobots
+      .agg(count(lit(1)),
+        // coalesce: sum over an empty gate is NULL, not 0
+        coalesce(sum(when($"robots_ok", 1L).otherwise(0L)), lit(0L)))
+      .as[(Long, Long)].head()))
+    Await.result(Future.sequence(writes), Duration.Inf)
+
+    // usually already complete by the time the writes drain
+    val (nDue, nAllowed) = Await.result(gateF, Duration.Inf)
     val nNew = Await.result(nNewF, Duration.Inf)
     val nCand = Await.result(nCandF, Duration.Inf)
 
     // deferred / frontier / seen sizes follow arithmetically — no extra jobs:
     // next_frontier = prev − due + deferred + new, deferred = allowed − gated
-    val nDeferred = nAllowed - nFetched
+    val nDeferred = nAllowed - f.n
     val prevFrontierSize = manifestField(store, k, "frontier_size")
     val prevSeenSize = manifestField(store, k, "seen_size")
     val nFrontier = prevFrontierSize.map(_ - nDue + nDeferred + nNew)
       .getOrElse(if (deltaMode) nextFrontier.count()
         else spark.read.parquet(pending.frontierPath).count())
-    val nSeen = prevSeenSize.map(_ + nNew).getOrElse(seen.count() + nNew)
-    val metrics = RoundMetrics(k, nDue, robotsDenied, nFetched,
-      nDeferred, nFetched, nErrors, nLinks, nLinks - nCand, nNew,
+    val nSeen = prevSeenSize.map(_ + nNew).getOrElse(d.seen.count() + nNew)
+    val metrics = RoundMetrics(k, nDue, nDue - nAllowed, f.n,
+      nDeferred, f.n, f.errors, f.links, f.links - nCand, nNew,
       nFrontier, nSeen)
     pending.commit(manifestJson(metrics, cfg))
 
-    robotsCacheOpt.foreach(_.unpersist(blocking = false))
-    phase1CacheOpt.foreach(_.unpersist(blocking = false))
-    Seq(withRobots, hostRanked, seqParent.toDF(), deferred.toDF(),
-      fetched.toDF(), cand, trulyNew, nextFrontier.toDF(), frontier.toDF())
+    Seq(s.ranked, g.withRobots, s.hostRanked, s.seqParent.toDF(),
+      s.deferred.toDF(), f.pages.toDF(), d.cand, d.trulyNew,
+      nextFrontier.toDF(), g.frontier.toDF())
       .foreach(_.unpersist(blocking = false))
-    rulesBcOpt.foreach(_.destroy())
-    RoundResult(k, metrics)
-    } catch {
-      case t: Throwable =>
-        // drain every in-flight write future, then drop the staged snapshot:
-        // leaving orphaned writes running into the tmp dir would race a
-        // retry's begin(k+1) deleting that dir concurrently
-        launched.synchronized(launched.toList)
-          .foreach(f => scala.util.Try(Await.ready(f, Duration.Inf)))
-        scala.util.Try(pending.abort())
-        throw t
-    }
+    metrics
   }
 
   private def manifestField(store: SnapshotStore, k: Int, field: String): Option[Long] =
@@ -876,8 +750,7 @@ object CrawlRound {
     orderedFrontierWrite(fr, path)
 
   private def orderedFrontierWrite(fr: Dataset[FrontierEntry], path: String): Unit = {
-    val n = math.max(1, math.min(fr.sparkSession.conf
-      .get("spark.sql.shuffle.partitions", "32").toInt, 64))
+    val n = math.max(1, math.min(shufflePartitions(fr.sparkSession), 64))
     fr.repartitionByRange(n, col("priority").desc, col("next_fetch_ts"), col("url_hash"))
       .sortWithinPartitions(col("priority").desc, col("next_fetch_ts"), col("url_hash"))
       .write.parquet(path)

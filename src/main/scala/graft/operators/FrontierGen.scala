@@ -43,12 +43,7 @@ object FrontierGen {
     spark.emptyDataset[LineageRow].write.parquet(pending.lineagePath)
     // coalesce: each partition yields a partial filter of the full bit-array
     // size, so aggregate fan-in is serialized megabytes per partition.
-    // Honors cfg.filterKind — a cuckoo-configured crawl must find a cuckoo
-    // file at round 0, or it would pay the cold-path rebuild immediately.
-    if (cfg.filterKind == "cuckoo") {
-      val cf = CrawlRound.cuckooOfUrls(entries.toDF(), cfg.bloomExpectedItems)
-      pending.writeCuckoo(cf)
-    } else if (cfg.filterShards > 0) {
+    if (cfg.filterShards > 0) {
       // sharded config: one distributed per-shard aggregation (never the
       // monolithic expectedItems-sized filter); shapes match the lifecycle's
       // BloomAgg deltas (CrawlRound.shardSizing)

@@ -123,47 +123,24 @@ object Model {
       seedPriority: Int = 5,
       roundIntervalMs: Long = 3600L * 1000,
       baseTs: Long = 1704067200000L, // 2024-01-01T00:00:00Z
-      hotHostThreshold: Int = 100000,
+      // every host's politeness top-k runs in two phases: a per-(host,
+      // salt) top-budget with salt = pmod(url_hash, saltBuckets), then the
+      // per-host top-budget over the survivors, so one hot host cannot skew
+      // the window shuffle. Any row in a host's top-budget is in its salt
+      // bucket's top-budget, so the value never changes the crawl; 1 is
+      // the unsalted policy (equivalence-tested).
       saltBuckets: Int = 16,
       // every k-th snapshot also writes the full URL-seen set repartitioned
       // by hash (compaction) so reads stay O(1 base + few deltas)
       compactSeenEvery: Int = 8,
+      // false: exact anti-join only — the oracle the bloom route (filter-
+      // clear ⇒ definitely new) is tested against
       useBloom: Boolean = true,
-      // "bloom" (built-in BloomFilter) or "cuckoo" (graft CuckooFilter —
-      // deletable, custom TypedImperativeAggregate); useBloom=false → exact
-      // anti-join only. Both route identically: filter-clear ⇒ definitely new.
-      filterKind: String = "bloom",
       bloomExpectedItems: Long = 1L << 20,
       bloomFpp: Double = 0.01,
-      // "fused" (default): robots rules are computed in the gate projection
-      // itself, memoized per executor (the Mercator cache moved executor-
-      // side) — NO driver robots structure and, crucially, NO dedicated
-      // robots job: the pre-fetch phase loses one whole job barrier, a
-      // measured ~0.7–1 s CONSTANT at every core count (pure non-scaling
-      // fraction of the round). "map": rules compiled driver-side from one
-      // distinct-hosts pass and broadcast as a host→Rules map — the classic
-      // driver-resident robots cache, right up to broadcastable host counts.
-      // "join": robots bodies ride a broadcast-joined (host, body) table
-      // with executor-side memoized parsing — the ≳10^7-distinct-hosts/round
-      // form. All three produce the identical crawl (equivalence-tested).
-      robotsForm: String = "fused",
-      // true (default): EVERY host goes through the two-phase salted top-k
-      // (salt = pmod(url_hash, saltBuckets), a codegen column — no UDF, no
-      // broadcast map). The phase-1 keep-proof makes salting semantics-
-      // neutral for any host, so hot-host DETECTION (a per-host count
-      // collect — one more pre-fetch job barrier) is unnecessary. false:
-      // only hosts whose due count exceeds hotHostThreshold are salted,
-      // which requires the counts pass ("map"/"join" forms only — the fused
-      // form has no counts job, so saltAllHosts=false disables salting).
-      saltAllHosts: Boolean = true,
-      // tasks-per-core multiplier for the fetch stage (sequenced's range
-      // partition count = shuffle.partitions × fetchWaves): >1 packs
-      // stragglers across waves, 1 = one task per core. Output is identical
-      // at any value (the global sequence is partition-count-independent).
-      fetchWaves: Int = 1,
       // 0 (default): one broadcast URL-seen filter — right up to broadcast
-      // size (~10^8-10^9 keys). >0 (bloom kind only): the filter is SHARDED
-      // by pmod(url_hash, n); candidates route to their shard's partition
+      // size (~10^8-10^9 keys). >0: the filter is SHARDED by
+      // pmod(url_hash, n); candidates route to their shard's partition
       // and probe a partition-local filter — per-executor memory is
       // O(total/n), the 10^10-URL form (a 1%-fpp bloom over 10^10 keys is
       // ~12 GB — unbroadcastable whole). Identical crawl output (the exact
@@ -197,30 +174,7 @@ object Model {
       // before the merge-on-read chain gets expensive. Decided from
       // manifests — zero extra jobs. Identical crawl output either way
       // (layout never affects semantics; equivalence-tested).
-      compactFrontierChurnRatio: Double = 0.0,
-      // J1 exact-dedup join form for filter-routed SUSPECTS (the bloom/
-      // cuckoo/shard hits — a small set by construction). "scan" (default):
-      // broadcast the suspect keys, semi-join to find the actual hits, then
-      // broadcast-anti — the seen table is SCANNED (2-column projection),
-      // never shuffled; per-round cost vs the unbounded seen set falls from
-      // O(seen) shuffle to O(seen) narrow scan. "shuffle": the plain
-      // left-anti SMJ/SHJ — the form to pick when suspect cardinality
-      // outgrows broadcast reach (≳10^7/round, i.e. the same regime as the
-      // sharded filter). Unfiltered probes (useBloom=false, shard cold
-      // path) always use the shuffle form. Identical crawl output
-      // (equivalence-tested).
-      seenJoin: String = "scan") {
-    // fail-loudly contract (CrawlMain scaladoc): a typo'd enum value must
-    // never silently select a default code path — the forms are output-
-    // equivalent, so a silent fallback would run (and measure) a different
-    // implementation than the one the caller asked for
-    require(Set("fused", "map", "join").contains(robotsForm),
-      s"robotsForm must be one of fused|map|join, got '$robotsForm'")
-    require(Set("bloom", "cuckoo").contains(filterKind),
-      s"filterKind must be one of bloom|cuckoo, got '$filterKind'")
-    require(Set("scan", "shuffle").contains(seenJoin),
-      s"seenJoin must be one of scan|shuffle, got '$seenJoin'")
-  }
+      compactFrontierChurnRatio: Double = 0.0)
 
   /** round_ts(k) — rounds tick on a fixed cadence so deferred entries
     * (next_fetch_ts = round_ts + budget*delay) come due by the next round. */

@@ -169,13 +169,6 @@ final class SnapshotStore(spark: SparkSession, val root: String,
     }
   }
 
-  /** Cumulative URL-seen cuckoo filter (the deletable alternative). */
-  def loadCuckoo(k: Int): Option[graft.functions.CuckooFilter] = {
-    val p = snapDir(k).resolve("cuckoo.bin")
-    if (!Files.exists(p)) None
-    else Some(graft.functions.CuckooFilter.deserialize(Files.readAllBytes(p)))
-  }
-
   /** Sharded URL-seen filter files (CrawlConfig.filterShards > 0): shard i
     * of snapshot k. Executors read these directly during the shard-local
     * probe — on a cluster this path is the shared store, same assumption as
@@ -224,9 +217,6 @@ final class SnapshotStore(spark: SparkSession, val root: String,
       val out = Files.newOutputStream(dir.resolve("bloom.bin"))
       try bf.writeTo(out) finally out.close()
     }
-
-    def writeCuckoo(cf: graft.functions.CuckooFilter): Unit =
-      Files.write(dir.resolve("cuckoo.bin"), cf.serialized)
 
     def writeFilterShard(i: Int, bytes: Array[Byte]): Unit =
       SnapshotStore.writeShardFile(filterShardsDir, i, bytes)

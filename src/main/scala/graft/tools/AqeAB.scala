@@ -10,8 +10,8 @@ import graft.sources.SnapshotStore
   * materializes every shuffle stage as its own job boundary (re-planning
   * between stages), which is pure overhead at bench scale but pays off via
   * skew-join/coalesce at cluster scale — measure, don't guess, which side
-  * this workload's round is on. Same harness discipline as WaveAB:
-  * alternating reps on one prepared store share host windows.
+  * this workload's round is on. Alternating reps on one prepared store
+  * share host windows.
   *
   * Usage: runMain graft.tools.AqeAB [cpus] [nUrls] [reps]
   */

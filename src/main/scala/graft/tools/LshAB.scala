@@ -6,8 +6,8 @@ import org.apache.spark.sql.SparkSession
   * moved it 1.43 → 2.06 s with an UNCHANGED, plan-locked physical plan
   * (broadcast bucket join over codegen signatures) — this harness settles
   * host-noise vs code cause with alternating reps in one session, the only
-  * discipline that resolves <2× effects on this host (see CLAUDE.md /
-  * WaveAB). Alternates AQE on/off too: the bench session runs AQE-off, and
+  * discipline that resolves <2× effects on a host with bursty CPU steal.
+  * Alternates AQE on/off too: the bench session runs AQE-off, and
   * the one plausible code-side suspect is AQE interacting with the bucket
   * join's post-shuffle partition count. q_ann_brute rides along as a control
   * (same table, no LSH path).

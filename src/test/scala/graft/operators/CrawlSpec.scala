@@ -126,25 +126,16 @@ class CrawlSpec extends AnyFunSuite {
   }
 
   test("bloom routing is exact: useBloom=false produces the identical crawl") {
+    // exact-only is the oracle: every link probe takes the shuffle-form
+    // anti-join, while the shared golden `store` routes bloom hits through
+    // the scan form — same crawl bit-for-bit, manifests included
     val s = new SnapshotStore(spark, SparkTestSession.tempDir("crawl-nobloom"))
-    Crawler.run(spark, s, seeds, 3, cfg.copy(useBloom = false))
-    val sB = new SnapshotStore(spark, SparkTestSession.tempDir("crawl-bloom"))
-    Crawler.run(spark, sB, seeds, 3, cfg.copy(useBloom = true))
-    assert(Crawler.seenDigest(spark, s) === Crawler.seenDigest(spark, sB))
+    Crawler.run(spark, s, seeds, Rounds, cfg.copy(useBloom = false))
+    assert(Crawler.seenDigest(spark, s) === Crawler.seenDigest(spark, store))
     val o1 = Crawler.ordering(spark, s).as[(Int, Long, String)].collect().toSeq
-    val o2 = Crawler.ordering(spark, sB).as[(Int, Long, String)].collect().toSeq
+    val o2 = Crawler.ordering(spark, store).as[(Int, Long, String)].collect().toSeq
     assert(o1 === o2)
-  }
-
-  test("cuckoo seen-filter produces the identical crawl to bloom and exact") {
-    val s = new SnapshotStore(spark, SparkTestSession.tempDir("crawl-cuckoo"))
-    Crawler.run(spark, s, seeds, 3, cfg.copy(filterKind = "cuckoo"))
-    val sB = new SnapshotStore(spark, SparkTestSession.tempDir("crawl-bloom2"))
-    Crawler.run(spark, sB, seeds, 3, cfg)
-    assert(Crawler.seenDigest(spark, s) === Crawler.seenDigest(spark, sB))
-    val o1 = Crawler.ordering(spark, s).as[(Int, Long, String)].collect().toSeq
-    val o2 = Crawler.ordering(spark, sB).as[(Int, Long, String)].collect().toSeq
-    assert(o1 === o2)
+    (0 to Rounds).foreach(k => assert(s.manifest(k) === store.manifest(k)))
   }
 
   test("manifest sizes reconcile with actual table counts every round") {
@@ -163,38 +154,20 @@ class CrawlSpec extends AnyFunSuite {
   }
 
   test("cold path: lost filter file is rebuilt distributed, crawl stays identical") {
-    // bloom and cuckoo variants: crawl 2 rounds, delete the filter file from
-    // the head snapshot (simulates a lost/corrupt sidecar), resume to the end.
-    // The rebuild must come from the exact seen set — digests and ordering
-    // match the uninterrupted crawl bit-for-bit.
-    for ((kind, file) <- Seq("bloom" -> "bloom.bin", "cuckoo" -> "cuckoo.bin")) {
-      val dir = SparkTestSession.tempDir(s"crawl-coldpath-$kind")
-      val s1 = new SnapshotStore(spark, dir)
-      val c = cfg.copy(filterKind = kind)
-      Crawler.run(spark, s1, seeds, 2, c)
-      val lost = java.nio.file.Paths.get(dir, s"snapshot-${s1.head.get}", file)
-      assert(java.nio.file.Files.deleteIfExists(lost), s"no $file to delete")
-      Crawler.run(spark, s1, seeds, Rounds, c) // resumes through the cold path
-      assert(Crawler.seenDigest(spark, s1) === Crawler.seenDigest(spark, store),
-        s"$kind cold-path digest")
-      val o1 = Crawler.ordering(spark, s1).as[(Int, Long, String)].collect().toSeq
-      val o2 = Crawler.ordering(spark, store).as[(Int, Long, String)].collect().toSeq
-      assert(o1 === o2, s"$kind cold-path ordering")
-    }
-  }
-
-  test("cuckoo over-capacity regrows instead of dropping keys (exactness holds)") {
-    // a filter sized for ~64 items over a crawl that sees thousands: without
-    // the regrow path this would silently drop keys and re-crawl URLs
-    val s = new SnapshotStore(spark, SparkTestSession.tempDir("crawl-tinycuckoo"))
-    Crawler.run(spark, s, seeds, 3, cfg.copy(filterKind = "cuckoo",
-      bloomExpectedItems = 64L))
-    val sB = new SnapshotStore(spark, SparkTestSession.tempDir("crawl-bigbloom"))
-    Crawler.run(spark, sB, seeds, 3, cfg)
-    assert(Crawler.seenDigest(spark, s) === Crawler.seenDigest(spark, sB))
-    // the persisted filter must have regrown to hold the whole seen set
-    val cf = s.loadCuckoo(s.head.get).get
-    assert(cf.failedInserts === 0L, "persisted filter carries dropped keys")
+    // crawl 2 rounds, delete the filter file from the head snapshot
+    // (simulates a lost/corrupt sidecar), resume to the end. The rebuild
+    // must come from the exact seen set — digests and ordering match the
+    // uninterrupted crawl bit-for-bit.
+    val dir = SparkTestSession.tempDir("crawl-coldpath")
+    val s1 = new SnapshotStore(spark, dir)
+    Crawler.run(spark, s1, seeds, 2, cfg)
+    val lost = java.nio.file.Paths.get(dir, s"snapshot-${s1.head.get}", "bloom.bin")
+    assert(java.nio.file.Files.deleteIfExists(lost), "no bloom.bin to delete")
+    Crawler.run(spark, s1, seeds, Rounds, cfg) // resumes through the cold path
+    assert(Crawler.seenDigest(spark, s1) === Crawler.seenDigest(spark, store))
+    val o1 = Crawler.ordering(spark, s1).as[(Int, Long, String)].collect().toSeq
+    val o2 = Crawler.ordering(spark, store).as[(Int, Long, String)].collect().toSeq
+    assert(o1 === o2)
   }
 
   test("sharded URL-seen filter produces the identical crawl to the broadcast form") {
@@ -212,22 +185,6 @@ class CrawlSpec extends AnyFunSuite {
     (0 to 4).foreach(k => assert(s.manifest(k) === sB.manifest(k)))
     // the shard files really exist and carry the whole seen set across shards
     assert(s.filterShardsExist(s.head.get, 5))
-  }
-
-  test("robots forms: fused (default), map, and join produce the identical crawl") {
-    val sF = new SnapshotStore(spark, SparkTestSession.tempDir("crawl-robotsfused"))
-    Crawler.run(spark, sF, seeds, 3, cfg) // default robotsForm = "fused"
-    val sM = new SnapshotStore(spark, SparkTestSession.tempDir("crawl-robotsmap"))
-    Crawler.run(spark, sM, seeds, 3, cfg.copy(robotsForm = "map"))
-    val sJ = new SnapshotStore(spark, SparkTestSession.tempDir("crawl-robotsjoin"))
-    Crawler.run(spark, sJ, seeds, 3, cfg.copy(robotsForm = "join"))
-    val oF = Crawler.ordering(spark, sF).as[(Int, Long, String)].collect().toSeq
-    for (s <- Seq(sM, sJ)) {
-      assert(Crawler.seenDigest(spark, s) === Crawler.seenDigest(spark, sF))
-      val o = Crawler.ordering(spark, s).as[(Int, Long, String)].collect().toSeq
-      assert(o === oF)
-      (0 to 3).foreach(k => assert(s.manifest(k) === sF.manifest(k)))
-    }
   }
 
   test("invariant report: six checks, zero violations on the golden crawl") {
@@ -268,43 +225,42 @@ class CrawlSpec extends AnyFunSuite {
     } finally spark.sparkContext.removeSparkListener(listener)
   }
 
-  test("seen-join forms: scan (default) and shuffle produce the identical crawl") {
-    // the shared golden `store` runs the default scan form; the shuffle form
-    // (plain left-anti) must yield the same crawl bit-for-bit — the join
-    // form is a physical choice, never a semantic one. Exact-only
-    // (useBloom=false) exercises the unfiltered path, which always takes
-    // the shuffle form regardless of config.
-    val sSh = new SnapshotStore(spark, SparkTestSession.tempDir("crawl-seenshuffle"))
-    Crawler.run(spark, sSh, seeds, Rounds, cfg.copy(seenJoin = "shuffle"))
-    val sEx = new SnapshotStore(spark, SparkTestSession.tempDir("crawl-seenexact"))
-    Crawler.run(spark, sEx, seeds, Rounds, cfg.copy(useBloom = false))
-    val oF = Crawler.ordering(spark, store).as[(Int, Long, String)].collect().toSeq
-    for (s <- Seq(sSh, sEx)) {
-      assert(Crawler.seenDigest(spark, s) === Crawler.seenDigest(spark, store))
-      val o = Crawler.ordering(spark, s).as[(Int, Long, String)].collect().toSeq
-      assert(o === oF)
-      (0 to Rounds).foreach(k => assert(s.manifest(k) === store.manifest(k)))
-    }
+  test("salting: saltBuckets 4 and 1 (unsalted) gates are identical") {
+    // keep-proof in practice: one bucket per host is exactly the unsalted
+    // politeness top-k, and four buckets must not change a single fetch
+    val salted = new SnapshotStore(spark, SparkTestSession.tempDir("crawl-salt4"))
+    Crawler.run(spark, salted, seeds, 3, cfg.copy(saltBuckets = 4))
+    val plain = new SnapshotStore(spark, SparkTestSession.tempDir("crawl-salt1"))
+    Crawler.run(spark, plain, seeds, 3, cfg.copy(saltBuckets = 1))
+    val o1 = Crawler.ordering(spark, salted).as[(Int, Long, String)].collect().toSeq
+    val o2 = Crawler.ordering(spark, plain).as[(Int, Long, String)].collect().toSeq
+    assert(o1 === o2)
+    assert(Crawler.seenDigest(spark, salted) === Crawler.seenDigest(spark, plain))
+    (0 to 3).foreach(k => assert(salted.manifest(k) === plain.manifest(k)))
   }
 
-  test("salting: salt-all (default), hot-threshold, and unsalted gates are identical") {
-    // keep-proof in practice, all three policies: every host salted via the
-    // codegen pmod column (default), only threshold-hot hosts salted via the
-    // broadcast-map UDF (needs a counts pass → map form), and no salting
-    val saltAll = new SnapshotStore(spark, SparkTestSession.tempDir("crawl-saltall"))
-    Crawler.run(spark, saltAll, seeds, 3, cfg.copy(saltBuckets = 4))
-    val hotOnly = new SnapshotStore(spark, SparkTestSession.tempDir("crawl-salt"))
-    Crawler.run(spark, hotOnly, seeds, 3, cfg.copy(robotsForm = "map",
-      saltAllHosts = false, hotHostThreshold = 1, saltBuckets = 4))
-    val plain = new SnapshotStore(spark, SparkTestSession.tempDir("crawl-plain"))
-    Crawler.run(spark, plain, seeds, 3, cfg.copy(saltAllHosts = false))
-    val o1 = Crawler.ordering(spark, saltAll).as[(Int, Long, String)].collect().toSeq
-    val o2 = Crawler.ordering(spark, hotOnly).as[(Int, Long, String)].collect().toSeq
-    val o3 = Crawler.ordering(spark, plain).as[(Int, Long, String)].collect().toSeq
-    assert(o1 === o3)
-    assert(o2 === o3)
-    assert(Crawler.seenDigest(spark, saltAll) === Crawler.seenDigest(spark, plain))
-    assert(Crawler.seenDigest(spark, hotOnly) === Crawler.seenDigest(spark, plain))
+  test("one shuffle partition reproduces the golden crawl, manifests included") {
+    // with one shuffle partition and AQE off, planning the politeness pass
+    // runs no job (no range sampling, no eager stage), so a gate count taken
+    // from whichever action first reports the gate plan reads 0 there. The
+    // manifests must not depend on the partition count.
+    val conf = spark.conf
+    val saved = Seq("spark.sql.shuffle.partitions", "spark.sql.adaptive.enabled")
+      .map(key => key -> conf.getOption(key))
+    val s = new SnapshotStore(spark, SparkTestSession.tempDir("crawl-onepart"))
+    try {
+      conf.set("spark.sql.shuffle.partitions", "1")
+      conf.set("spark.sql.adaptive.enabled", "false")
+      Crawler.run(spark, s, seeds, Rounds, cfg)
+    } finally saved.foreach {
+      case (key, Some(v)) => conf.set(key, v)
+      case (key, None) => conf.unset(key)
+    }
+    (0 to Rounds).foreach(k => assert(s.manifest(k) === store.manifest(k), s"manifest $k"))
+    assert(Crawler.seenDigest(spark, s) === Crawler.seenDigest(spark, store))
+    val o1 = Crawler.ordering(spark, s).as[(Int, Long, String)].collect().toSeq
+    val o2 = Crawler.ordering(spark, store).as[(Int, Long, String)].collect().toSeq
+    assert(o1 === o2)
   }
 
   test("text extraction is byte-stable: sha256 recomputes identically") {
