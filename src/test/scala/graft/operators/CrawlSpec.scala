@@ -125,17 +125,38 @@ class CrawlSpec extends AnyFunSuite {
     assert(o1 === o2)
   }
 
-  test("bloom routing is exact: useBloom=false produces the identical crawl") {
-    // exact-only is the oracle: every link probe takes the shuffle-form
-    // anti-join, while the shared golden `store` routes bloom hits through
-    // the scan form — same crawl bit-for-bit, manifests included
+  /** The exact-only crawl (useBloom=false): every link probe takes the
+    * shuffle-form anti-join, while the golden `store` routes bloom hits
+    * through the scan form. Shared by the two tests below. */
+  lazy val exactStore: SnapshotStore = {
     val s = new SnapshotStore(spark, SparkTestSession.tempDir("crawl-nobloom"))
     Crawler.run(spark, s, seeds, Rounds, cfg.copy(useBloom = false))
-    assert(Crawler.seenDigest(spark, s) === Crawler.seenDigest(spark, store))
-    val o1 = Crawler.ordering(spark, s).as[(Int, Long, String)].collect().toSeq
+    s
+  }
+
+  test("bloom routing is exact: useBloom=false produces the identical crawl") {
+    assert(Crawler.seenDigest(spark, exactStore) === Crawler.seenDigest(spark, store))
+    val o1 = Crawler.ordering(spark, exactStore).as[(Int, Long, String)].collect().toSeq
     val o2 = Crawler.ordering(spark, store).as[(Int, Long, String)].collect().toSeq
     assert(o1 === o2)
-    (0 to Rounds).foreach(k => assert(s.manifest(k) === store.manifest(k)))
+  }
+
+  test("seen-join forms: scan (default) and shuffle produce the identical crawl") {
+    // the join form is a physical choice, never a semantic one: the scan
+    // form (golden `store`) and the shuffle form (exact-only crawl) yield
+    // the same crawl bit-for-bit, every round's manifest included
+    assert(Crawler.seenDigest(spark, exactStore) === Crawler.seenDigest(spark, store))
+    (0 to Rounds).foreach(k => assert(exactStore.manifest(k) === store.manifest(k)))
+    // and on the golden crawl's own seen set the two forms agree row for row
+    // over a probe of seen and unseen keys
+    val seen = Crawler.seenSet(spark, store).toDF()
+    val probe = seen.select($"url_hash_hi", $"url_hash_lo").limit(50)
+      .unionByName(Seq((1L, 2L), (3L, 4L)).toDF("url_hash_hi", "url_hash_lo"))
+    def keys(df: org.apache.spark.sql.DataFrame) =
+      df.as[(Long, Long)].collect().sorted.toSeq
+    val scan = keys(CrawlRound.seenAntiJoinScan(seen, probe))
+    assert(scan === keys(CrawlRound.seenAntiJoinShuffle(seen, probe)))
+    assert(scan === Seq((1L, 2L), (3L, 4L)))
   }
 
   test("manifest sizes reconcile with actual table counts every round") {
