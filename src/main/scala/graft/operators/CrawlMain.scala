@@ -10,8 +10,7 @@ import graft.sources.SnapshotStore
   *
   *   spark-submit --class graft.operators.CrawlMain … \
   *     --base /path/to/store --rounds 5 [--seeds 20] [--host-budget 4]
-  *     [--round-cap 500] [--no-bloom] [--cpus N] [--filter-shards N]
-  *     [--frontier-deltas] [--adaptive-backoff]
+  *     [--round-cap 500] [--no-bloom] [--cpus N] [--adaptive-backoff]
   *
   * Runs (or resumes — the store's HEAD decides) the crawl until `rounds`
   * rounds are committed, printing one metrics line per round. On a real
@@ -25,9 +24,15 @@ object CrawlMain {
     // and silently corrupt the options after it. Anything unrecognized,
     // a value that looks like a key, or a dangling key fails LOUDLY —
     // a typo'd option must never silently fall back to a default.
-    val flagNames = Set("no-bloom", "frontier-deltas", "adaptive-backoff")
+    val flagNames = Set("no-bloom", "adaptive-backoff")
     val keyNames = Set("base", "rounds", "seeds", "host-budget", "round-cap",
-      "filter-shards", "cpus")
+      "cpus")
+    val known = keyNames ++ flagNames
+    def unknown(k: String): Nothing =
+      sys.error(s"unknown option '$k' (known: ${known.toSeq.sorted.mkString(", ")})")
+    // an unknown --option is named as such before any pairing, so a removed
+    // flag is never misreported as a dangling key
+    args.find(a => a.startsWith("--") && !known.contains(a.drop(2))).foreach(unknown)
     val (flagArgs, kvArgs) =
       args.partition(a => a.startsWith("--") && flagNames.contains(a.drop(2)))
     if (kvArgs.length % 2 != 0)
@@ -37,8 +42,7 @@ object CrawlMain {
         if (v.startsWith("--"))
           sys.error(s"option $k is missing its value (got '$v')")
         k.drop(2) -> v
-      case Array(k, _) =>
-        sys.error(s"unknown option '$k' (known: ${(keyNames ++ flagNames).toSeq.sorted.mkString(", ")})")
+      case Array(k, _) => unknown(k)
     }.toMap ++ flagArgs.map(a => a.drop(2) -> "true")
 
     val base = opts.getOrElse("base", sys.error("--base <dir> required"))
@@ -48,8 +52,6 @@ object CrawlMain {
       hostBudget = opts.getOrElse("host-budget", "4").toInt,
       roundCap = opts.getOrElse("round-cap", "500").toInt,
       useBloom = !opts.contains("no-bloom"),
-      filterShards = opts.getOrElse("filter-shards", "0").toInt,
-      frontierDeltas = opts.contains("frontier-deltas"),
       adaptiveBackoff = opts.contains("adaptive-backoff"))
     val cpus = opts.getOrElse("cpus",
       sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))

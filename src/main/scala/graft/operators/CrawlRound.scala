@@ -72,30 +72,6 @@ object CrawlRound {
   /** xxh64 of a url, computed executor-side — the URL-seen filter key. */
   private val xxh64OfUrl = udf((u: String) => Hashes.xxh64(u))
 
-  /** Per-shard bloom sizing, CLAMPED to Spark's BloomFilterAggregate limits.
-    * BloomFilterAggregate silently clamps estimatedNumItems/numBits to
-    * `spark.sql.optimizer.runtime.bloomFilter.maxNumItems` / `maxNumBits`
-    * (defaults 4e6 / 67108864); an unclamped `BloomFilter.create` for an
-    * empty shard would then carry a different hash-function count and
-    * `mergeInPlace` with the next round's clamped BloomAgg delta would
-    * throw IncompatibleMergeException. Clamping BOTH constructions to the
-    * session's limits keeps every build of a shard merge-compatible. At a
-    * true 10^10-URL deployment, raise those two confs together with
-    * `filterShards` so the clamp does not silently degrade the fpp. */
-  private[operators] def shardSizing(spark: SparkSession,
-      cfg: CrawlConfig): (Long, Long) = {
-    val maxItems = spark.conf
-      .get("spark.sql.optimizer.runtime.bloomFilter.maxNumItems", "4000000").toLong
-    val maxBits = spark.conf
-      .get("spark.sql.optimizer.runtime.bloomFilter.maxNumBits", "67108864").toLong
-    val perShard = math.min(
-      math.max(cfg.bloomExpectedItems / math.max(cfg.filterShards, 1), 1024L),
-      maxItems)
-    val numBits = math.min(
-      BloomFilter.optimalNumOfBits(perShard, cfg.bloomFpp), maxBits)
-    (perShard, numBits)
-  }
-
   /** Distributed bloom build over any DataFrame with a `url` column. */
   private def bloomOfUrls(urls: DataFrame,
       expectedItems: Long, fpp: Double): BloomFilter =
@@ -111,40 +87,11 @@ object CrawlRound {
   private def bloomOf(bytes: Array[Byte]): BloomFilter =
     BloomFilter.readFrom(new java.io.ByteArrayInputStream(bytes))
 
-  /** Shard-local URL-seen probe (CrawlConfig.filterShards > 0): candidates
-    * repartition by pmod(url_hash, n); each partition lazily loads the filter
-    * file(s) of the shards hashed into it (≈1 when n ≥ partitions) from the
-    * shared store and flags rows in place. No filter is ever broadcast or
-    * held whole anywhere. */
-  private def shardProbe(spark: SparkSession, store: SnapshotStore, k: Int,
-      cand: DataFrame, cfg: CrawlConfig): DataFrame = {
-    import spark.implicits._
-    val n = cfg.filterShards
-    val paths = (0 until n).map(i => store.filterShardPath(k, i)).toArray
-    val typed = cand
-      .withColumn("shard", pmod(col("url_hash"), lit(n.toLong)).cast("int"))
-      .select($"url", $"url_hash", $"url_hash_hi", $"url_hash_lo", $"host",
-        $"priority", $"shard")
-      .as[(String, Long, Long, Long, String, Int, Int)]
-    typed.repartition(n, $"shard").mapPartitions { it =>
-      val filters = scala.collection.mutable.Map.empty[Int, BloomFilter]
-      it.map { case (url, h, hi, lo, host, prio, shard) =>
-        val bf = filters.getOrElseUpdate(shard, {
-          val in = java.nio.file.Files.newInputStream(
-            java.nio.file.Paths.get(paths(shard)))
-          try BloomFilter.readFrom(in) finally in.close()
-        })
-        (url, h, hi, lo, host, prio, bf.mightContainLong(h))
-      }
-    }.toDF("url", "url_hash", "url_hash_hi", "url_hash_lo", "host",
-      "priority", "maybe_seen")
-  }
-
   /** J1 exact URL-seen dedup, SHUFFLE form: plain left-anti join. Both sides
     * exchange on the 128-bit key — at 10^10 seen URLs that is a full seen-set
     * shuffle EVERY round, which is why filter-routed suspects never take it.
-    * It is the form for probe sides that are O(candidates) because no filter
-    * routed them: useBloom=false and the shard cold path. */
+    * It is the form for the one probe side no filter routed, which is
+    * O(candidates): useBloom=false, the exact-only oracle. */
   private[graft] def seenAntiJoinShuffle(seen: DataFrame,
       suspects: DataFrame): DataFrame =
     suspects.join(seen.select(col("url_hash_hi"), col("url_hash_lo")),
@@ -193,36 +140,18 @@ object CrawlRound {
       .write.parquet(pending.seenDeltaPath)
     spark.emptyDataset[FetchResult].write.parquet(pending.pagesPath)
     spark.emptyDataset[LineageRow].write.parquet(pending.lineagePath)
-    if (cfg.filterShards > 0) {
-      // sharded config: write the per-shard files directly — never allocate
-      // the monolithic expectedItems-sized filter (at the 10^10 design point
-      // that is ~12 GB of driver heap to index a handful of seeds). One
-      // shard is in memory at a time; shapes match the BloomAgg deltas the
-      // lifecycle merges in later (shardSizing).
-      val n = cfg.filterShards
-      val (perShard, numBits) = shardSizing(spark, cfg)
-      val byShard = seeds.groupBy(e => math.floorMod(e.url_hash, n.toLong).toInt)
-      (0 until n).foreach { i =>
-        val bf = BloomFilter.create(perShard, numBits)
-        byShard.getOrElse(i, Nil).foreach(e => bf.putLong(e.url_hash))
-        val bos = new java.io.ByteArrayOutputStream()
-        bf.writeTo(bos)
-        pending.writeFilterShard(i, bos.toByteArray)
-      }
-    } else {
-      val bf = BloomFilter.create(cfg.bloomExpectedItems, cfg.bloomFpp)
-      seeds.foreach(e => bf.putLong(e.url_hash))
-      pending.writeBloom(bf)
-    }
+    val bf = BloomFilter.create(cfg.bloomExpectedItems, cfg.bloomFpp)
+    seeds.foreach(e => bf.putLong(e.url_hash))
+    pending.writeBloom(bf)
     pending.commit(manifestJson(RoundMetrics(-1, 0, 0, 0, 0, 0, 0, 0, 0,
       seeds.size.toLong, seeds.size.toLong, seeds.size.toLong), cfg))
   }
 
-  /** `gate` output: snapshot k's frontier, its not-due rows, and the due rows
+  /** `gate` output: snapshot k's not-due frontier rows, and the due rows
     * with their robots verdict and crawl delay (persisted). */
-  private final case class Gated(frontier: Dataset[FrontierEntry],
-      notDue: Dataset[FrontierEntry], withRobots: DataFrame) {
-    def frontierCols: Seq[Column] = frontier.columns.map(col).toSeq
+  private final case class Gated(notDue: Dataset[FrontierEntry],
+      withRobots: DataFrame) {
+    def frontierCols: Seq[Column] = notDue.columns.map(col).toSeq
   }
 
   /** `sequence` output: this round's fetch tasks, the persisted re-enqueues,
@@ -292,15 +221,7 @@ object CrawlRound {
   private def gate(spark: SparkSession, store: SnapshotStore, k: Int,
       rts: Long): Gated = {
     import spark.implicits._
-    // In the delta layout, loadFrontier returns a merge-on-read plan (delta
-    // window + bloom route + 128-bit anti-join) that EVERY consumer of
-    // due/notDue would otherwise re-execute — the gate and the frontier
-    // write — multiplying the reconstruction cost per round and eroding the
-    // O(churn) win the layout buys. Persist the reconstruction for the
-    // round; unpersisted with the round caches.
-    val frontierRaw = store.loadFrontier(k)
-    val frontier =
-      if (store.hasFullFrontier(k)) frontierRaw else frontierRaw.persist()
+    val frontier = store.loadFrontier(k)
     // plain column predicates, pushed into the parquet scan
     val due = frontier.filter($"next_fetch_ts" <= rts)
     val notDue = frontier.filter($"next_fetch_ts" > rts)
@@ -312,7 +233,7 @@ object CrawlRound {
       .withColumn("crawl_delay_ms", delayU($"host"))
       .withColumn("robots_ok", robotsOkU($"host", $"url"))
       .persist()
-    Gated(frontier, notDue, withRobots)
+    Gated(notDue, withRobots)
   }
 
   /** Politeness and sequencing over the allowed rows: W1/W2 per-host
@@ -485,134 +406,48 @@ object CrawlRound {
       store.loadBloom(k).map(bloomBytes).getOrElse(
         traced("bloom-cold-rebuild")(bloomBytes(
           bloomOfUrls(seen.toDF(), cfg.bloomExpectedItems, cfg.bloomFpp))))
-    // filterShards > 0: the cumulative filter is SHARDED by pmod(url_hash, n)
-    // — candidates route to their shard's partition and probe a
-    // partition-local filter, so per-executor filter memory is O(total/n)
-    // instead of the whole (≈12 GB at 10^10 keys, 1% fpp — unbroadcastable).
-    // Exactness backstop unchanged.
-    val sharded = cfg.useBloom && cfg.filterShards > 0
-    val probeOpt: Option[org.apache.spark.sql.expressions.UserDefinedFunction] =
-      if (!cfg.useBloom || sharded) None
-      else {
-        val bfb = spark.sparkContext.broadcast(bloomOf(prevBloomBytes))
-        Some(udf((h: Long) => bfb.value.mightContainLong(h)))
-      }
     // Filter hits are a SUSPECT set (a small fraction of candidates by
-    // construction) and take the scan-form join; unfiltered probes
-    // (useBloom=false, shard cold path) are O(candidates) and take the
-    // shuffle form.
+    // construction) and take the scan-form join; the unfiltered probe
+    // (useBloom=false) is O(candidates) and takes the shuffle form.
+    // n_new is counted at commit from the populated cache (like cand),
+    // NOT via an Observation here: the first actions over trulyNew are
+    // THREE concurrent write jobs racing to materialize the cache, and
+    // Observation snapshots its metrics when the FIRST of them completes —
+    // accumulator updates from another job's still-running tasks would be
+    // missing, silently undercounting n_new (and with it the frontier/seen
+    // manifest arithmetic every later round inherits).
     val trulyNew =
-      (if (sharded && store.filterShardsExist(k, cfg.filterShards)) {
-        val flagged = shardProbe(spark, store, k, cand, cfg)
-        val suspects = flagged.filter($"maybe_seen").drop("maybe_seen")
-        val definitelyNew = flagged.filter(!$"maybe_seen").drop("maybe_seen")
+      (if (cfg.useBloom) {
+        val bfb = spark.sparkContext.broadcast(bloomOf(prevBloomBytes))
+        val mightContain = udf((h: Long) => bfb.value.mightContainLong(h))
+        val suspects = cand.filter(mightContain($"url_hash"))
+        val definitelyNew = cand.filter(!mightContain($"url_hash"))
         seenAntiJoinScan(seen.toDF(), suspects).unionByName(definitelyNew)
-      } else probeOpt match {
-        case Some(mightContain) =>
-          val suspects = cand.filter(mightContain($"url_hash"))
-          val definitelyNew = cand.filter(!mightContain($"url_hash"))
-          seenAntiJoinScan(seen.toDF(), suspects).unionByName(definitelyNew)
-        // no filter, or the sharded cold path (shard files absent — e.g.
-        // round 0, whose snapshot only carries the monolithic init filter):
-        // exact anti-join this round; writeFilter then writes the full shard
-        // set for snapshot k+1
-        case None =>
-          seenAntiJoinShuffle(seen.toDF(), cand)
-      // n_new is counted at commit from the populated cache (like cand),
-      // NOT via an Observation here: the first actions over trulyNew are
-      // THREE concurrent write jobs racing to materialize the cache, and
-      // Observation snapshots its metrics when the FIRST of them completes —
-      // accumulator updates from another job's still-running tasks would be
-      // missing, silently undercounting n_new (and with it the frontier/seen
-      // manifest arithmetic every later round inherits).
-      }).persist()
+      } else seenAntiJoinShuffle(seen.toDF(), cand)).persist()
     Deduped(seen, cand, trulyNew, () => prevBloomBytes)
   }
 
   /** A3 filter lifecycle: merge this round's new hashes into the running
     * filter (a fresh instance off prevBloomBytes — never the broadcast probe
     * copy, which merge would mutate) and stage it for snapshot k+1. */
-  private def writeFilter(spark: SparkSession, store: SnapshotStore, k: Int,
-      cfg: CrawlConfig, d: Deduped, newSeen: Dataset[SeenUrl],
+  private def writeFilter(spark: SparkSession, cfg: CrawlConfig, d: Deduped,
       pending: SnapshotStore#Pending): Unit = {
     import spark.implicits._
-    if (cfg.useBloom && cfg.filterShards > 0) {
-      // sharded bloom lifecycle: per-shard delta blooms in ONE distributed
-      // groupBy aggregation (BloomAgg — stat.bloomFilter cannot group), then
-      // each TASK merges its shard(s) with the previous snapshot's shard
-      // file and writes the result straight into the staging dir — shard
-      // bytes never pass through the driver. (The previous collect().toMap
-      // held ALL shards at once ≈ the total filter size, ~12 GB at the
-      // 10^10/1% design point — exactly the structure sharding exists to
-      // avoid.) repartition(n, shard) puts ≈1 shard per task, so peak task
-      // memory is O(total/n). Prev shards missing (cold / round 0) → the
-      // same aggregation builds the full set from seen ∪ new.
-      val n = cfg.filterShards
-      val (perShard, numBits) = shardSizing(spark, cfg)
-      val havePrev = store.filterShardsExist(k, n)
-      val src =
-        if (havePrev) d.trulyNew.select($"url_hash")
-        else d.seen.toDF().unionByName(newSeen.toDF())
-          .select(xxh64OfUrl($"url").as("url_hash"))
-      val outDir = pending.filterShardsDir
-      val prevPaths: Array[String] =
-        if (havePrev) (0 until n).map(i => store.filterShardPath(k, i)).toArray
-        else Array.empty
-      traced("bloom-shard-build")(
-        src.withColumn("shard", pmod($"url_hash", lit(n.toLong)).cast("int"))
-          .groupBy($"shard")
-          .agg(org.apache.spark.sql.graftexpr.BloomAgg($"url_hash", perShard,
-            numBits).as("bytes"))
-          .repartition(n, $"shard")
-          .as[(Int, Array[Byte])]
-          .foreachPartition { (it: Iterator[(Int, Array[Byte])]) =>
-            it.foreach { case (i, delta) =>
-              val bytes =
-                if (prevPaths.isEmpty) delta
-                else {
-                  val in = java.nio.file.Files.newInputStream(
-                    java.nio.file.Paths.get(prevPaths(i)))
-                  val prev = try BloomFilter.readFrom(in) finally in.close()
-                  prev.mergeInPlace(
-                    BloomFilter.readFrom(new java.io.ByteArrayInputStream(delta)))
-                  val bos = new java.io.ByteArrayOutputStream()
-                  prev.writeTo(bos)
-                  bos.toByteArray
-                }
-              graft.sources.SnapshotStore.writeShardFile(outDir, i, bytes)
-            }
-          })
-      // shards that saw no delta row this round: carry the previous file
-      // forward (byte copy — never deserialized) or write an empty filter;
-      // driver-side, one shard in flight at a time
-      (0 until n).foreach { i =>
-        val out = java.nio.file.Paths.get(outDir, s"shard-$i.bin")
-        if (!java.nio.file.Files.exists(out)) {
-          if (havePrev)
-            java.nio.file.Files.copy(java.nio.file.Paths.get(prevPaths(i)), out)
-          else
-            pending.writeFilterShard(i,
-              bloomBytes(BloomFilter.create(perShard, numBits)))
-        }
-      }
-    } else {
-      // same (expectedItems, fpp) as the persistent filter — mergeInPlace
-      // requires identical bit-array sizes. Fan-in: every scan partition
-      // yields a FULL-size partial filter, so the coalesce caps the
-      // serialized megabytes through the aggregate — but a fixed coalesce(4)
-      // also capped the delta scan at 4 cores, a measured ~2–3 s CONSTANT
-      // slice at high core counts (pure non-scaling F; at ≤4 cores the core
-      // count is the cap anyway). 16 partials × ~10 MB (1% fpp, 2^23 items)
-      // sit well inside driver headroom; at filter sizes where 16 partials
-      // would not, the sharded path is the right config, not a tighter cap.
-      val fanIn = math.max(1, math.min(shufflePartitions(spark), 16))
-      val deltaBloom = traced("bloom-build")(d.trulyNew.select($"url_hash")
-        .coalesce(fanIn)
-        .stat.bloomFilter("url_hash", cfg.bloomExpectedItems, cfg.bloomFpp))
-      val prevBloom = bloomOf(d.prevBloomBytes())
-      prevBloom.mergeInPlace(deltaBloom)
-      pending.writeBloom(prevBloom)
-    }
+    // same (expectedItems, fpp) as the persistent filter — mergeInPlace
+    // requires identical bit-array sizes. Fan-in: every scan partition
+    // yields a FULL-size partial filter, so the coalesce caps the
+    // serialized megabytes through the aggregate — but a fixed coalesce(4)
+    // also capped the delta scan at 4 cores, a measured ~2–3 s CONSTANT
+    // slice at high core counts (pure non-scaling F; at ≤4 cores the core
+    // count is the cap anyway). 16 partials × ~10 MB (1% fpp, 2^23 items)
+    // sit well inside driver headroom.
+    val fanIn = math.max(1, math.min(shufflePartitions(spark), 16))
+    val deltaBloom = traced("bloom-build")(d.trulyNew.select($"url_hash")
+      .coalesce(fanIn)
+      .stat.bloomFilter("url_hash", cfg.bloomExpectedItems, cfg.bloomFpp))
+    val prevBloom = bloomOf(d.prevBloomBytes())
+    prevBloom.mergeInPlace(deltaBloom)
+    pending.writeBloom(prevBloom)
   }
 
   /** Commit snapshot k+1. The remaining outputs (frontier, seen delta,
@@ -634,56 +469,17 @@ object CrawlRound {
     // notDue ⟂ deferred by the due filter) — plain union, no merge shuffle.
     // Persisted because the range write needs two passes (boundary sampling +
     // the shuffle itself) and must not recompute the union branches.
-    // Delta mode skips the persist: the full union is only consumed on the
-    // rare fallback count — caching 10^10 rows for that would defeat the
-    // point of the log-structured layout.
-    val deltaMode = cfg.frontierDeltas && {
-      if (cfg.compactFrontierChurnRatio > 0) {
-        // churn-driven cadence: delta while Σ delta rows since the last full
-        // base < ratio × base size, else compact. Chain churn comes from the
-        // manifests already on disk (snapshot r's manifest holds round r-1's
-        // metrics; its delta rows = deferred + new upserts + fetched +
-        // denied removals) — no jobs, O(chain length) driver string parses.
-        val base = (k to 0 by -1).find(store.hasFullFrontier)
-        val baseSize = base.flatMap(b => manifestField(store, b, "frontier_size"))
-        val chainChurn = base.map { b =>
-          ((b + 1) to k).map { r =>
-            Seq("deferred", "new_urls", "fetched", "robots_denied")
-              .map(field => manifestField(store, r, field).getOrElse(0L)).sum
-          }.sum
-        }.getOrElse(0L)
-        baseSize match {
-          case Some(bs) => chainChurn < (cfg.compactFrontierChurnRatio * bs).toLong
-          case None => (k + 1) % math.max(cfg.compactFrontierEvery, 1) != 0
-        }
-      } else (k + 1) % math.max(cfg.compactFrontierEvery, 1) != 0
-    }
     val nextFrontier =
-      if (deltaMode) g.notDue.unionByName(s.deferred).unionByName(newEntries)
-      else g.notDue.unionByName(s.deferred).unionByName(newEntries).persist()
+      g.notDue.unionByName(s.deferred).unionByName(newEntries).persist()
     val newSeen = d.trulyNew.select($"url_hash_hi", $"url_hash_lo", $"url",
       lit(k + 1).as("first_seen_round")).as[SeenUrl]
 
     val writes = f.writes ++ Seq(
       staging.launch(traced("write-frontier")(
-        if (deltaMode) {
-          // churn only: upserts (deferred + newly discovered) and removals
-          // (fetched this round + robots-denied). Each url appears at most
-          // once (the sets are disjoint); no range shuffle — the full
-          // rewrite happens on compaction rounds.
-          val frontierCols = g.frontierCols
-          val upserts = s.deferred.toDF().select(frontierCols: _*)
-            .unionByName(newEntries.toDF().select(frontierCols: _*))
-            .withColumn("op", lit("u"))
-          val removals = s.tasks.toDF().select(frontierCols: _*)
-            .unionByName(g.withRobots.filter(!$"robots_ok")
-              .select(frontierCols: _*))
-            .withColumn("op", lit("r"))
-          upserts.unionByName(removals).write.parquet(pending.frontierDeltaPath)
-        } else orderedFrontierWrite(nextFrontier, pending.frontierPath))),
+        orderedFrontierWrite(nextFrontier, pending.frontierPath))),
       staging.launch(traced("write-seen")(
         newSeen.write.parquet(pending.seenDeltaPath))),
-      staging.launch(writeFilter(spark, store, k, cfg, d, newSeen, pending))) ++
+      staging.launch(writeFilter(spark, cfg, d, pending))) ++
       // periodic compaction: materialize the whole seen set hash-partitioned,
       // so loadSeen reads one clustered base + a few deltas (SURVEY.md §4.2)
       (if (cfg.compactSeenEvery > 0 && (k + 1) % cfg.compactSeenEvery == 0)
@@ -725,8 +521,7 @@ object CrawlRound {
     val prevFrontierSize = manifestField(store, k, "frontier_size")
     val prevSeenSize = manifestField(store, k, "seen_size")
     val nFrontier = prevFrontierSize.map(_ - nDue + nDeferred + nNew)
-      .getOrElse(if (deltaMode) nextFrontier.count()
-        else spark.read.parquet(pending.frontierPath).count())
+      .getOrElse(spark.read.parquet(pending.frontierPath).count())
     val nSeen = prevSeenSize.map(_ + nNew).getOrElse(d.seen.count() + nNew)
     val metrics = RoundMetrics(k, nDue, nDue - nAllowed, f.n,
       nDeferred, f.n, f.errors, f.links, f.links - nCand, nNew,
@@ -735,7 +530,7 @@ object CrawlRound {
 
     Seq(s.ranked, g.withRobots, s.hostRanked, s.seqParent.toDF(),
       s.deferred.toDF(), f.pages.toDF(), d.cand, d.trulyNew,
-      nextFrontier.toDF(), g.frontier.toDF())
+      nextFrontier.toDF())
       .foreach(_.unpersist(blocking = false))
     metrics
   }

@@ -1,7 +1,6 @@
 package graft.operators
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions.{lit, pmod}
 
 import graft.core.{Hashes, SyntheticWeb}
 import graft.plans.Model._
@@ -17,8 +16,8 @@ object FrontierGen {
   /** `spreadRounds = 0` (default): every URL is due at round 0 — the growth
     * phase. `spreadRounds = R > 0`: next_fetch_ts is hash-spread uniformly
     * over rounds 0..R-1, so each round dequeues ~n/R URLs out of an n-row
-    * frontier — the STEADY-STATE shape (churn ≪ frontier) the log-structured
-    * delta layout targets; used by tools.DeltaBench to measure it. */
+    * frontier — the STEADY-STATE shape (churn ≪ frontier); perfbench's
+    * `crawl_frontier` workload passes it. */
   def init(spark: SparkSession, store: SnapshotStore, n: Long,
       cfg: CrawlConfig, seed: Long = 777L, spreadRounds: Int = 0): Long = {
     import spark.implicits._
@@ -43,41 +42,8 @@ object FrontierGen {
     spark.emptyDataset[LineageRow].write.parquet(pending.lineagePath)
     // coalesce: each partition yields a partial filter of the full bit-array
     // size, so aggregate fan-in is serialized megabytes per partition.
-    if (cfg.filterShards > 0) {
-      // sharded config: one distributed per-shard aggregation (never the
-      // monolithic expectedItems-sized filter); shapes match the lifecycle's
-      // BloomAgg deltas (CrawlRound.shardSizing)
-      val n = cfg.filterShards
-      val (perShard, numBits) = CrawlRound.shardSizing(spark, cfg)
-      // each task writes its shard(s) straight into the staging dir — shard
-      // bytes never pass through the driver (a collect here would hold the
-      // whole ≈total-filter-size map at once; see CrawlRound.writeFilter)
-      val outDir = pending.filterShardsDir
-      entries.toDF()
-        .withColumn("shard", pmod($"url_hash", lit(n.toLong)).cast("int"))
-        .groupBy($"shard")
-        .agg(org.apache.spark.sql.graftexpr.BloomAgg($"url_hash", perShard,
-          numBits).as("bytes"))
-        .repartition(n, $"shard")
-        .as[(Int, Array[Byte])]
-        .foreachPartition { (it: Iterator[(Int, Array[Byte])]) =>
-          it.foreach { case (i, bytes) =>
-            graft.sources.SnapshotStore.writeShardFile(outDir, i, bytes) }
-        }
-      // empty shards (no url hashed into them): one filter in flight at a time
-      (0 until n).foreach { i =>
-        if (!java.nio.file.Files.exists(
-            java.nio.file.Paths.get(outDir, s"shard-$i.bin"))) {
-          val bf = org.apache.spark.util.sketch.BloomFilter.create(perShard, numBits)
-          val bos = new java.io.ByteArrayOutputStream()
-          bf.writeTo(bos)
-          pending.writeFilterShard(i, bos.toByteArray)
-        }
-      }
-    } else {
-      pending.writeBloom(entries.select($"url_hash").coalesce(4).stat
-        .bloomFilter("url_hash", cfg.bloomExpectedItems, cfg.bloomFpp))
-    }
+    pending.writeBloom(entries.select($"url_hash").coalesce(4).stat
+      .bloomFilter("url_hash", cfg.bloomExpectedItems, cfg.bloomFpp))
     val nRows = entries.count()
     pending.commit(CrawlRound.manifestJson(
       RoundMetrics(-1, 0, 0, 0, 0, 0, 0, 0, 0, nRows, nRows, nRows), cfg))

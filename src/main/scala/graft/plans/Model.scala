@@ -136,16 +136,10 @@ object Model {
       // false: exact anti-join only — the oracle the bloom route (filter-
       // clear ⇒ definitely new) is tested against
       useBloom: Boolean = true,
+      // sizing of the one broadcast URL-seen bloom filter; a resumed crawl
+      // must keep it (mergeInPlace needs identical bit-array sizes)
       bloomExpectedItems: Long = 1L << 20,
       bloomFpp: Double = 0.01,
-      // 0 (default): one broadcast URL-seen filter — right up to broadcast
-      // size (~10^8-10^9 keys). >0: the filter is SHARDED by
-      // pmod(url_hash, n); candidates route to their shard's partition
-      // and probe a partition-local filter — per-executor memory is
-      // O(total/n), the 10^10-URL form (a 1%-fpp bloom over 10^10 keys is
-      // ~12 GB — unbroadcastable whole). Identical crawl output (the exact
-      // anti-join backstop is unchanged; equivalence-tested).
-      filterShards: Int = 0,
       // opt-in adaptive politeness: a host whose fetch-error rate in the
       // PREVIOUS round exceeded backoffErrorRate gets half the host budget
       // this round (floor 1) — the standard crawler reaction to failing /
@@ -153,28 +147,7 @@ object Model {
       // behavior, and with the threshold never exceeded the crawl is
       // byte-identical (equivalence-tested).
       adaptiveBackoff: Boolean = false,
-      backoffErrorRate: Double = 0.5,
-      // opt-in log-structured frontier: non-compaction snapshots write only
-      // this round's CHURN (deferred + new upserts, fetched/denied removals)
-      // as `frontier_delta/`; every compactFrontierEvery-th snapshot
-      // rewrites the full range-ordered table. At the 10^10-row design
-      // point this turns the per-round O(frontier) range shuffle+rewrite
-      // into O(churn), paid back by a bloom-routed merge-on-read
-      // (SnapshotStore.loadFrontier). Identical crawl output
-      // (equivalence-tested).
-      frontierDeltas: Boolean = false,
-      compactFrontierEvery: Int = 8,
-      // 0 (default): compaction on the fixed compactFrontierEvery cadence.
-      // > 0: CHURN-DRIVEN cadence — keep writing deltas while the
-      // accumulated delta rows since the last full base stay under
-      // ratio × base-frontier-size, then compact. DeltaBench measured the
-      // delta layout's cost concentrating in chain-growth + compaction
-      // rounds, so the right cadence tracks churn, not round count: a
-      // low-churn steady state compacts rarely; a churn spike compacts
-      // before the merge-on-read chain gets expensive. Decided from
-      // manifests — zero extra jobs. Identical crawl output either way
-      // (layout never affects semantics; equivalence-tested).
-      compactFrontierChurnRatio: Double = 0.0)
+      backoffErrorRate: Double = 0.5)
 
   /** round_ts(k) — rounds tick on a fixed cadence so deferred entries
     * (next_fetch_ts = round_ts + budget*delay) come due by the next round. */

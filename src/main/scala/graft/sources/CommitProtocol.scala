@@ -24,7 +24,7 @@ import java.nio.file.{Files, Path, Paths, StandardCopyOption}
   * 2024 conditional writes) and GCS (x-goog-if-generation-match: 0) provide:
   *
   *   1. tables are written under an IMMUTABLE unique prefix
-  *      `data/<uuid>/{frontier,seen_delta,pages,lineage,filter_shards}/…` —
+  *      `data/<uuid>/{frontier,seen_delta,pages,lineage}/…` —
   *      task outputs land there directly (no rename: object writes are
   *      already atomic per object, and the prefix is invisible because
   *      nothing references it yet);
@@ -41,9 +41,7 @@ import java.nio.file.{Files, Path, Paths, StandardCopyOption}
   *      by any `meta/snapshot-*.json` older than a retention window.
   *
   * Readers resolve HEAD → pointer → prefix; they never list `data/`, so
-  * eventual-consistency on listings (legacy S3) is irrelevant. The shard
-  * filter files ([[SnapshotStore.writeShardFile]]) already fit: each task
-  * PUTs its shard object under the staged prefix idempotently.
+  * eventual-consistency on listings (legacy S3) is irrelevant.
   */
 trait CommitProtocol {
   /** Atomically make `staged` visible as `snapshot-k` under `root` and

@@ -43,8 +43,8 @@ object StreamingCrawl {
   /** Streaming URL-seen dedup: drop re-discovered URLs across micro-batches
     * — the streaming analogue of the batch rounds' URL-seen filter. Exact
     * form: one state-store row per URL, unbounded — right for bounded
-    * backfills/replays; a 10^10-URL continuous frontier belongs to the batch
-    * rounds' sharded-bloom snapshots, not the state store.
+    * backfills/replays; a large continuous frontier belongs to the batch
+    * rounds' bloom-routed snapshots, not the state store.
     *
     * State keys on the url STRING, not a 64-bit hash: at the 10^10-URL
     * design point xxh64 has expected birthday collisions, and a collision

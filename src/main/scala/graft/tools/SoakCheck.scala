@@ -11,13 +11,10 @@ import graft.sources.SnapshotStore
 /** Dev soak harness: a longer crawl (default 8 rounds, compaction every 3)
   * that cross-checks the arithmetically-derived manifest sizes against
   * actual table counts and re-asserts the global invariants at horizon.
-  * `runMain graft.tools.SoakCheck [rounds] [filterShards] [deltas]` — exits
-  * nonzero on violation. */
+  * `runMain graft.tools.SoakCheck [rounds]` — exits nonzero on violation. */
 object SoakCheck {
   def main(args: Array[String]): Unit = {
     val rounds = args.headOption.getOrElse("8").toInt
-    val shards = args.lift(1).getOrElse("0").toInt
-    val frontierDeltas = args.lift(2).contains("deltas")
     val spark = SparkSession.builder().master("local[8]")
       .appName("soak").config("spark.sql.shuffle.partitions", "8")
       .config("spark.sql.session.timeZone", "UTC")
@@ -36,9 +33,7 @@ object SoakCheck {
     }
     rm(java.nio.file.Paths.get(dir))
     val store = new SnapshotStore(spark, dir)
-    val cfg = CrawlConfig(roundCap = 400, compactSeenEvery = 3,
-      filterShards = shards,
-      frontierDeltas = frontierDeltas, compactFrontierEvery = 3)
+    val cfg = CrawlConfig(roundCap = 400, compactSeenEvery = 3)
     Crawler.run(spark, store, SyntheticWeb.seeds(20), rounds, cfg)
 
     var failures = 0

@@ -56,11 +56,7 @@ object TraceRound {
       })
     val store = new SnapshotStore(spark, dir)
     val cfg = CrawlConfig(hostBudget = 1000, roundCap = Int.MaxValue,
-      bloomExpectedItems = 1L << 22,
-      // 3rd arg "deltas": log-structured frontier (compaction far away, so
-      // both traced rounds write churn only — the 10^10-row shape)
-      frontierDeltas = args.lift(2).contains("deltas"),
-      compactFrontierEvery = 64)
+      bloomExpectedItems = 1L << 22)
     val tg0 = System.nanoTime()
     FrontierGen.init(spark, store, n, cfg)
     System.err.println(f"[trace] frontier-gen: ${(System.nanoTime() - tg0) / 1e9}%.2fs")

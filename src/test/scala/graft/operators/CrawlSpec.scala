@@ -191,21 +191,21 @@ class CrawlSpec extends AnyFunSuite {
     assert(o1 === o2)
   }
 
-  test("sharded URL-seen filter produces the identical crawl to the broadcast form") {
-    // 5 shards over the default bloom kind; includes the cold round-0 path
-    // (snapshot 0 carries only the monolithic init filter, so round 0 probes
-    // via the exact anti-join and the lifecycle writes the first shard set)
-    val s = new SnapshotStore(spark, SparkTestSession.tempDir("crawl-shardedbloom"))
-    Crawler.run(spark, s, seeds, 4, cfg.copy(filterShards = 5))
-    val sB = new SnapshotStore(spark, SparkTestSession.tempDir("crawl-monobloom"))
-    Crawler.run(spark, sB, seeds, 4, cfg)
-    assert(Crawler.seenDigest(spark, s) === Crawler.seenDigest(spark, sB))
-    val o1 = Crawler.ordering(spark, s).as[(Int, Long, String)].collect().toSeq
-    val o2 = Crawler.ordering(spark, sB).as[(Int, Long, String)].collect().toSeq
-    assert(o1 === o2)
-    (0 to 4).foreach(k => assert(s.manifest(k) === sB.manifest(k)))
-    // the shard files really exist and carry the whole seen set across shards
-    assert(s.filterShardsExist(s.head.get, 5))
+  test("snapshot layout: every committed snapshot holds exactly the documented entries") {
+    // the SnapshotStore scaladoc layout, locked on the golden crawl:
+    // seen_full/ appears exactly on the compactSeenEvery rounds
+    import java.nio.file.{Files, Paths}
+    import scala.jdk.CollectionConverters._
+    (0 to store.head.get).foreach { k =>
+      val ls = Files.list(Paths.get(store.root, s"snapshot-$k"))
+      val got = try ls.iterator().asScala.map(p =>
+          p.getFileName.toString + (if (Files.isDirectory(p)) "/" else "")).toSet
+        finally ls.close()
+      val compacted = k > 0 && k % cfg.compactSeenEvery == 0
+      val want = Set("frontier/", "seen_delta/", "pages/", "lineage/", "bloom.bin",
+        "manifest.json") ++ (if (compacted) Set("seen_full/") else Set.empty[String])
+      assert(got === want, s"snapshot-$k")
+    }
   }
 
   test("invariant report: six checks, zero violations on the golden crawl") {
