@@ -133,18 +133,30 @@ object CrawlRound {
     val t0 = roundTs(cfg, 0)
     val seeds = seedUrls.flatMap(UrlCanon.canonical).distinct
       .map(u => entryFor(u, cfg.seedPriority, t0, 0))
+    writeSnapshotZero(spark, store, spark.createDataset(seeds), cfg)
+  }
+
+  /** Commit snapshot 0 from an already-deduplicated frontier: the frontier,
+    * every entry as round-0 seen, empty pages and lineage, the URL-seen
+    * filter and the manifest. Returns the entry count. The filter build
+    * coalesces because each partition yields a partial filter of the full
+    * bit-array size, so aggregate fan-in is serialized megabytes per
+    * partition; the merged bits equal driver-side `putLong` of every
+    * `url_hash`. */
+  private[operators] def writeSnapshotZero(spark: SparkSession, store: SnapshotStore,
+      entries: Dataset[FrontierEntry], cfg: CrawlConfig): Long = {
+    import spark.implicits._
     val pending = store.begin(0)
-    val fr = spark.createDataset(seeds)
-    orderedFrontierWrite(fr, pending.frontierPath)
-    fr.map(e => SeenUrl(e.url_hash_hi, e.url_hash_lo, e.url, 0))
+    orderedFrontierWrite(entries, pending.frontierPath)
+    entries.map(e => SeenUrl(e.url_hash_hi, e.url_hash_lo, e.url, 0))
       .write.parquet(pending.seenDeltaPath)
     spark.emptyDataset[FetchResult].write.parquet(pending.pagesPath)
     spark.emptyDataset[LineageRow].write.parquet(pending.lineagePath)
-    val bf = BloomFilter.create(cfg.bloomExpectedItems, cfg.bloomFpp)
-    seeds.foreach(e => bf.putLong(e.url_hash))
-    pending.writeBloom(bf)
-    pending.commit(manifestJson(RoundMetrics(-1, 0, 0, 0, 0, 0, 0, 0, 0,
-      seeds.size.toLong, seeds.size.toLong, seeds.size.toLong), cfg))
+    pending.writeBloom(entries.select($"url_hash").coalesce(4).stat
+      .bloomFilter("url_hash", cfg.bloomExpectedItems, cfg.bloomFpp))
+    val n = entries.count()
+    pending.commit(manifestJson(RoundMetrics(-1, 0, 0, 0, 0, 0, 0, 0, 0, n, n, n), cfg))
+    n
   }
 
   /** `gate` output: snapshot k's not-due frontier rows, and the due rows
@@ -518,11 +530,8 @@ object CrawlRound {
     // deferred / frontier / seen sizes follow arithmetically — no extra jobs:
     // next_frontier = prev − due + deferred + new, deferred = allowed − gated
     val nDeferred = nAllowed - f.n
-    val prevFrontierSize = manifestField(store, k, "frontier_size")
-    val prevSeenSize = manifestField(store, k, "seen_size")
-    val nFrontier = prevFrontierSize.map(_ - nDue + nDeferred + nNew)
-      .getOrElse(spark.read.parquet(pending.frontierPath).count())
-    val nSeen = prevSeenSize.map(_ + nNew).getOrElse(d.seen.count() + nNew)
+    val nFrontier = manifestField(store, k, "frontier_size") - nDue + nDeferred + nNew
+    val nSeen = manifestField(store, k, "seen_size") + nNew
     val metrics = RoundMetrics(k, nDue, nDue - nAllowed, f.n,
       nDeferred, f.n, f.errors, f.links, f.links - nCand, nNew,
       nFrontier, nSeen)
@@ -535,15 +544,18 @@ object CrawlRound {
     metrics
   }
 
-  private def manifestField(store: SnapshotStore, k: Int, field: String): Option[Long] =
-    store.manifest(k).flatMap(m =>
-      ("\"" + field + "\":(-?\\d+)").r.findFirstMatchIn(m).map(_.group(1).toLong))
+  /** One numeric field of snapshot k's manifest. Every committed manifest
+    * comes from `manifestJson`, which writes every field, so a missing
+    * manifest or field is a corrupt store and fails here. */
+  private[operators] def manifestField(store: SnapshotStore, k: Int, field: String): Long = {
+    val m = store.manifest(k)
+      .getOrElse(throw new IllegalStateException(s"snapshot $k has no manifest"))
+    ("\"" + field + "\":(-?\\d+)").r.findFirstMatchIn(m).map(_.group(1).toLong)
+      .getOrElse(throw new IllegalStateException(s"snapshot $k manifest has no $field: $m"))
+  }
 
   /** O1: materialize the frontier range-partitioned + sorted by the dequeue
     * order — next round's scan reads it near-sorted with minimal shuffle. */
-  private[operators] def writeFrontier(fr: Dataset[FrontierEntry], path: String): Unit =
-    orderedFrontierWrite(fr, path)
-
   private def orderedFrontierWrite(fr: Dataset[FrontierEntry], path: String): Unit = {
     val n = math.max(1, math.min(shufflePartitions(fr.sparkSession), 64))
     fr.repartitionByRange(n, col("priority").desc, col("next_fetch_ts"), col("url_hash"))

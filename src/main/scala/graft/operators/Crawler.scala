@@ -63,8 +63,6 @@ object Crawler {
   def invariantReport(spark: SparkSession, store: SnapshotStore): DataFrame = {
     import spark.implicits._
     val k = store.head.getOrElse(0)
-    def field(m: String, f: String): Long =
-      ("\"" + f + "\":(-?\\d+)").r.findFirstMatchIn(m).get.group(1).toLong
     // ONE Spark job for the whole report (r06): every check is a single-row
     // (check_idx, violations) aggregate branch of one union plan, so the
     // per-snapshot manifest cross-check — previously TWO driver-side count()
@@ -76,9 +74,8 @@ object Crawler {
     // manifest sizes are derived (prev − due + deferred + new), never counted
     // in-round — so count the real tables here, per committed snapshot
     val manifestChecks: Seq[DataFrame] = (1 to k).flatMap { i =>
-      val m = store.manifest(i).get
-      val fExp = field(m, "frontier_size")
-      val sExp = field(m, "seen_size")
+      val fExp = CrawlRound.manifestField(store, i, "frontier_size")
+      val sExp = CrawlRound.manifestField(store, i, "seen_size")
       Seq(
         check(0, when($"n" === fExp, 0L).otherwise(1L))(
           store.loadFrontier(i).toDF().agg(count(lit(1)).as("n"))),

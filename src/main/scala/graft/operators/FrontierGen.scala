@@ -34,19 +34,7 @@ object FrontierGen {
       CrawlRound.entryFor(u, prio, due, 0)
     }.dropDuplicates("url_hash_hi", "url_hash_lo").persist()
 
-    val pending = store.begin(0)
-    CrawlRound.writeFrontier(entries, pending.frontierPath)
-    entries.map(e => SeenUrl(e.url_hash_hi, e.url_hash_lo, e.url, 0))
-      .write.parquet(pending.seenDeltaPath)
-    spark.emptyDataset[FetchResult].write.parquet(pending.pagesPath)
-    spark.emptyDataset[LineageRow].write.parquet(pending.lineagePath)
-    // coalesce: each partition yields a partial filter of the full bit-array
-    // size, so aggregate fan-in is serialized megabytes per partition.
-    pending.writeBloom(entries.select($"url_hash").coalesce(4).stat
-      .bloomFilter("url_hash", cfg.bloomExpectedItems, cfg.bloomFpp))
-    val nRows = entries.count()
-    pending.commit(CrawlRound.manifestJson(
-      RoundMetrics(-1, 0, 0, 0, 0, 0, 0, 0, 0, nRows, nRows, nRows), cfg))
+    val nRows = CrawlRound.writeSnapshotZero(spark, store, entries, cfg)
     entries.unpersist(blocking = false)
     nRows
   }

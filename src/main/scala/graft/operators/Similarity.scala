@@ -329,7 +329,7 @@ object Similarity {
     // both embedding arrays through its exchange into a SortAggregate; and
     // the explicit repartition on query_id alone satisfies BOTH the dedup
     // clustering and the window partitioning, so the whole tail runs off ONE
-    // exchange (was two). Output identical (tools.QExp lsh_v0/v1).
+    // exchange (was two). Output identical to the two-exchange form.
     val scored = c.join(broadcast(q), Seq("table", "sig"))
       .filter(col("neighbor_id") =!= col("query_id"))
       .select(col("query_id"), col("neighbor_id"),

@@ -18,7 +18,7 @@ object TraceRound {
       .config("spark.local.dir", "/dev/shm/graft-trace/spark-local")
       .config("spark.ui.enabled", "false")
       .config("spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version", "2")
-      .config("spark.sql.adaptive.enabled", "false") // match Bench (AqeAB-measured)
+      .config("spark.sql.adaptive.enabled", "false") // match Bench (see its AQE note)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val dir = s"/dev/shm/graft-trace/store-$cpus-$n"

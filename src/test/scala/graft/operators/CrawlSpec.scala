@@ -4,7 +4,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkTestSession
-import graft.core.{SyntheticWeb, UrlCanon}
+import graft.core.{Hashes, SyntheticWeb, UrlCanon}
 import graft.plans.Model._
 import graft.sources.SnapshotStore
 
@@ -244,6 +244,41 @@ class CrawlSpec extends AnyFunSuite {
       Thread.sleep(500)
       assert(execs.get() === 1, s"expected 1 SQL execution, saw ${execs.get()}")
     } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  test("invariant report flags a manifest frontier_size that is off by one") {
+    // mutate a copy: the golden store is shared by the other tests
+    import java.nio.file.{Files, Paths}
+    val src = Paths.get(store.root)
+    val dst = Paths.get(SparkTestSession.tempDir("crawl-corrupt"))
+    val walk = Files.walk(src)
+    try walk.forEach { p =>
+      val q = dst.resolve(src.relativize(p).toString)
+      if (Files.isDirectory(p)) Files.createDirectories(q) else Files.copy(p, q)
+    } finally walk.close()
+    val m = dst.resolve("snapshot-3").resolve("manifest.json")
+    val n = CrawlRound.manifestField(store, 3, "frontier_size")
+    Files.writeString(m, Files.readString(m)
+      .replace(s""""frontier_size":$n,""", s""""frontier_size":${n + 1},"""))
+    val rep = Crawler.invariantReport(spark, new SnapshotStore(spark, dst.toString))
+      .as[(Int, String, Long)].collect().map { case (_, name, v) => name -> v }.toMap
+    assert(rep === Map(
+      "manifest_frontier_size_matches_actual" -> 1L,
+      "manifest_seen_size_matches_actual" -> 0L,
+      "no_url_fetched_twice" -> 0L,
+      "fetched_urls_all_in_seen" -> 0L,
+      "seen_distinct_on_128bit_key" -> 0L,
+      "politeness_spacing_exact" -> 0L))
+  }
+
+  test("snapshot 0 URL-seen filter is exactly the canonical seeds' xxh64") {
+    val bf = org.apache.spark.util.sketch.BloomFilter.create(cfg.bloomExpectedItems, cfg.bloomFpp)
+    seeds.flatMap(UrlCanon.canonical).distinct.foreach(u => bf.putLong(Hashes.xxh64(u)))
+    val want = new java.io.ByteArrayOutputStream()
+    bf.writeTo(want)
+    val got = java.nio.file.Files.readAllBytes(
+      java.nio.file.Paths.get(store.root, "snapshot-0", "bloom.bin"))
+    assert(java.util.Arrays.equals(got, want.toByteArray))
   }
 
   test("salting: saltBuckets 4 and 1 (unsalted) gates are identical") {
