@@ -18,15 +18,22 @@ import org.apache.spark.sql.graftexpr.{CosineSim, LshSignatures, SigAgree}
   * scalar UDF surface (canonicalizer, extractor, text analysis) still comes
   * from `UdfRegistry.register`, which needs a live session. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    def fn(name: String, builder: Seq[Expression] => Expression): Unit =
+  override def apply(ext: SparkSessionExtensions): Unit =
+    GraftExtensions.functions.foreach { case (name, builder) =>
       ext.injectFunction((FunctionIdentifier(name),
         new ExpressionInfo("graft.GraftExtensions", name), builder))
-    fn("cosine_sim", exprs => CosineSim(exprs.head, exprs(1)))
-    fn("sig_agree", exprs => SigAgree(exprs.head, exprs(1)))
-    // fixed default LSH config (8 bits × 8 tables over 64-d), matching
-    // UdfRegistry's SQL surface; the Scala API takes the planes explicitly
-    fn("lsh_sigs", exprs => LshSignatures(exprs.head,
-      graft.operators.Similarity.hyperplanes(64, 64).flatten, 8, 8, 64))
-  }
+    }
+}
+
+object GraftExtensions {
+
+  /** The codegen'd Catalyst expressions under their SQL names, as
+    * (name, builder) — the one list both registration routes use. */
+  private[graft] val functions: Seq[(String, Seq[Expression] => Expression)] = Seq(
+    "cosine_sim" -> (exprs => CosineSim(exprs.head, exprs(1))),
+    "sig_agree" -> (exprs => SigAgree(exprs.head, exprs(1))),
+    // fixed default LSH config (8 bits × 8 tables over 64-d) for SQL use;
+    // the Scala API takes the planes explicitly
+    "lsh_sigs" -> (exprs => LshSignatures(exprs.head,
+      graft.operators.Similarity.hyperplanes(64, 64).flatten, 8, 8, 64)))
 }

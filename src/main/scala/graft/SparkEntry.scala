@@ -29,6 +29,8 @@ object SparkEntry {
   private def t(s: SparkSession, dir: String, name: String): DataFrame =
     s.read.parquet(s"$dir/$name.parquet")
 
+  @volatile private var sweptStaleScratch = false
+
   /** FIXED per-query scratch path under java.io.tmpdir, wiped before reuse:
     * queries that write side outputs (corpus build, shard export) used to
     * `createTempDirectory` per invocation and never delete it, so every
@@ -42,14 +44,6 @@ object SparkEntry {
     * in-flight scratch under a shared fixed path — the synchronized block
     * only serializes within one JVM. Each JVM writes under its own pid dir;
     * dirs of dead pids are swept once per JVM, so /tmp still stays flat. */
-  private def rmTree(q: java.nio.file.Path): Unit = {
-    if (java.nio.file.Files.isDirectory(q)) {
-      val s = java.nio.file.Files.list(q)
-      try s.forEach(rmTree) finally s.close()
-    }
-    java.nio.file.Files.deleteIfExists(q)
-  }
-  @volatile private var sweptStaleScratch = false
   private def scratchDir(name: String): String = synchronized {
     val root = java.nio.file.Paths.get(
       sys.props.getOrElse("java.io.tmpdir", "/tmp"), "graft-scratch")
@@ -63,12 +57,12 @@ object SparkEntry {
             scala.util.Try(ProcessHandle.of(nm.toLong)
               .map[Boolean](_.isAlive).orElse(false)).getOrElse(false) == false
           // also sweep pre-r06 non-pid dirs left by older layouts
-          if (dead || !nm.forall(_.isDigit)) rmTree(d)
+          if (dead || !nm.forall(_.isDigit)) SnapshotStore.deleteRecursively(d)
         } finally s.close()
       }
     }
     val p = root.resolve(ProcessHandle.current().pid().toString).resolve(name)
-    rmTree(p)
+    SnapshotStore.deleteRecursively(p)
     java.nio.file.Files.createDirectories(p.getParent)
     p.toString
   }

@@ -38,25 +38,14 @@ object UdfRegistry {
     r.register("synthetic_html", (url: String) => SyntheticWeb.htmlFor(url))
     r.register("text_profile", (text: String) => TextAnalysis.profile(text))
     // codegen'd Catalyst expressions under their SQL names
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "cosine_sim",
-      exprs => org.apache.spark.sql.graftexpr.CosineSim(exprs.head, exprs(1)),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "sig_agree",
-      exprs => org.apache.spark.sql.graftexpr.SigAgree(exprs.head, exprs(1)),
-      "built-in")
-    // fixed default LSH config (8 bits × 8 tables over 64-d) for SQL use;
-    // the Scala API takes the planes explicitly
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "lsh_sigs",
-      exprs => org.apache.spark.sql.graftexpr.LshSignatures(exprs.head,
-        graft.operators.Similarity.hyperplanes(64, 64).flatten, 8, 8, 64),
-      "built-in")
+    graft.GraftExtensions.functions.foreach { case (name, builder) =>
+      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
+        name, builder, "built-in")
+    }
     Seq("canonicalize_url", "canonical_url", "url_host", "url_path",
       "url_hash64", "extract_text", "extract_links", "robots_allowed",
       "lang_id", "quality_score", "token_count", "bpe_token_count",
       "simhash64", "doc_fingerprint", "minhash_sig", "synthetic_html",
-      "text_profile", "cosine_sim", "sig_agree", "lsh_sigs")
+      "text_profile") ++ graft.GraftExtensions.functions.map(_._1)
   }
 }

@@ -34,8 +34,8 @@ import graft.sources.SnapshotStore
   *    dropped URL (SURVEY.md §4.2 exactness backstop);
   *  - every host goes through a salted two-phase politeness top-k so a hot
   *    host (zipfian frontier) cannot skew the window shuffle (SURVEY.md §4.3);
-  *  - the global round sequence is assigned with range-partition + per-partition
-  *    offsets — a total order across files without a single-reducer sort.
+  *  - the global round sequence is assigned with range-partition +
+  *    `zipWithIndex` — a total order across files without a single-reducer sort.
   */
 object CrawlRound {
 
@@ -72,11 +72,21 @@ object CrawlRound {
   /** xxh64 of a url, computed executor-side — the URL-seen filter key. */
   private val xxh64OfUrl = udf((u: String) => Hashes.xxh64(u))
 
-  /** Distributed bloom build over any DataFrame with a `url` column. */
-  private def bloomOfUrls(urls: DataFrame,
-      expectedItems: Long, fpp: Double): BloomFilter =
-    urls.select(xxh64OfUrl(col("url")).as("h")).coalesce(4)
-      .stat.bloomFilter("h", expectedItems, fpp)
+  /** Distributed URL-seen filter build over a one-column long DataFrame of
+    * url hashes, with the persistent filter's (expectedItems, fpp) —
+    * mergeInPlace requires identical bit-array sizes. Merging partials is a
+    * bit OR, so the bytes do not depend on the fan-in. Fan-in: every scan
+    * partition yields a FULL-size partial filter, so the coalesce caps the
+    * serialized megabytes through the aggregate — but a fixed coalesce(4)
+    * also capped the delta scan at 4 cores, a measured ~2–3 s CONSTANT
+    * slice at high core counts (pure non-scaling F; at ≤4 cores the core
+    * count is the cap anyway). 16 partials × ~10 MB (1% fpp, 2^23 items)
+    * sit well inside driver headroom. */
+  private def bloomOfHashes(hashes: DataFrame, cfg: CrawlConfig): BloomFilter = {
+    val fanIn = math.max(1, math.min(shufflePartitions(hashes.sparkSession), 16))
+    hashes.coalesce(fanIn).stat
+      .bloomFilter(hashes.columns.head, cfg.bloomExpectedItems, cfg.bloomFpp)
+  }
 
   private def bloomBytes(bf: BloomFilter): Array[Byte] = {
     val bos = new java.io.ByteArrayOutputStream()
@@ -138,11 +148,8 @@ object CrawlRound {
 
   /** Commit snapshot 0 from an already-deduplicated frontier: the frontier,
     * every entry as round-0 seen, empty pages and lineage, the URL-seen
-    * filter and the manifest. Returns the entry count. The filter build
-    * coalesces because each partition yields a partial filter of the full
-    * bit-array size, so aggregate fan-in is serialized megabytes per
-    * partition; the merged bits equal driver-side `putLong` of every
-    * `url_hash`. */
+    * filter (bits equal to driver-side `putLong` of every `url_hash`) and
+    * the manifest. Returns the entry count. */
   private[operators] def writeSnapshotZero(spark: SparkSession, store: SnapshotStore,
       entries: Dataset[FrontierEntry], cfg: CrawlConfig): Long = {
     import spark.implicits._
@@ -152,8 +159,7 @@ object CrawlRound {
       .write.parquet(pending.seenDeltaPath)
     spark.emptyDataset[FetchResult].write.parquet(pending.pagesPath)
     spark.emptyDataset[LineageRow].write.parquet(pending.lineagePath)
-    pending.writeBloom(entries.select($"url_hash").coalesce(4).stat
-      .bloomFilter("url_hash", cfg.bloomExpectedItems, cfg.bloomFpp))
+    pending.writeBloom(bloomOfHashes(entries.select($"url_hash"), cfg))
     val n = entries.count()
     pending.commit(manifestJson(RoundMetrics(-1, 0, 0, 0, 0, 0, 0, 0, 0, n, n, n), cfg))
     n
@@ -417,7 +423,7 @@ object CrawlRound {
     lazy val prevBloomBytes: Array[Byte] =
       store.loadBloom(k).map(bloomBytes).getOrElse(
         traced("bloom-cold-rebuild")(bloomBytes(
-          bloomOfUrls(seen.toDF(), cfg.bloomExpectedItems, cfg.bloomFpp))))
+          bloomOfHashes(seen.select(xxh64OfUrl($"url").as("h")), cfg))))
     // Filter hits are a SUSPECT set (a small fraction of candidates by
     // construction) and take the scan-form join; the unfiltered probe
     // (useBloom=false) is O(candidates) and takes the shuffle form.
@@ -445,18 +451,8 @@ object CrawlRound {
   private def writeFilter(spark: SparkSession, cfg: CrawlConfig, d: Deduped,
       pending: SnapshotStore#Pending): Unit = {
     import spark.implicits._
-    // same (expectedItems, fpp) as the persistent filter — mergeInPlace
-    // requires identical bit-array sizes. Fan-in: every scan partition
-    // yields a FULL-size partial filter, so the coalesce caps the
-    // serialized megabytes through the aggregate — but a fixed coalesce(4)
-    // also capped the delta scan at 4 cores, a measured ~2–3 s CONSTANT
-    // slice at high core counts (pure non-scaling F; at ≤4 cores the core
-    // count is the cap anyway). 16 partials × ~10 MB (1% fpp, 2^23 items)
-    // sit well inside driver headroom.
-    val fanIn = math.max(1, math.min(shufflePartitions(spark), 16))
-    val deltaBloom = traced("bloom-build")(d.trulyNew.select($"url_hash")
-      .coalesce(fanIn)
-      .stat.bloomFilter("url_hash", cfg.bloomExpectedItems, cfg.bloomFpp))
+    val deltaBloom =
+      traced("bloom-build")(bloomOfHashes(d.trulyNew.select($"url_hash"), cfg))
     val prevBloom = bloomOf(d.prevBloomBytes())
     prevBloom.mergeInPlace(deltaBloom)
     pending.writeBloom(prevBloom)
@@ -564,21 +560,22 @@ object CrawlRound {
   }
 
   /** Global 0-based sequence in (priority DESC, next_fetch_ts, url_hash) order
-    * without a single-reducer sort: range-repartition, then add per-partition
-    * offsets (two narrow passes over the persisted sorted data). Sort keys are
-    * unique (url_hash distinct within a frontier), so the order — and hence the
-    * sequence — is independent of where the range boundaries fall. */
-  /** Returns (sequenced, cachedParent): the seq assignment is a cheap narrow
+    * without a single-reducer sort: range-repartition, sort within partitions,
+    * then `zipWithIndex` (one count job over all but the last partition, none
+    * at one partition). Sort keys are unique (url_hash distinct within a
+    * frontier), so the order — and hence the sequence — is independent of
+    * where the range boundaries fall.
+    *
+    * Returns (sequenced, cachedParent): the seq assignment is a cheap narrow
     * map over the cached range-sorted parent, so downstream actions recompute
     * it from cache instead of paying a dedicated materialization pass. The
     * caller unpersists `cachedParent` at round end.
     *
-    * The per-partition offsets MUST be keyed by the parent RDD's OWN
-    * partition index (`mapPartitionsWithIndex`), never by
-    * `TaskContext.getPartitionId()`: the task partition id is the CONSUMING
-    * stage's — inside a union (e.g. the deferred ∪ branches of the frontier
-    * write) branch partitions are renumbered and the offsets would be
-    * garbage. (Found as a real row-loss bug by SoakCheck's manifest
+    * `zipWithIndex` offsets each partition by the RDD's OWN partition index,
+    * never by `TaskContext.getPartitionId()`: the task partition id is the
+    * CONSUMING stage's — inside a union (e.g. the deferred ∪ branches of the
+    * frontier write) branch partitions are renumbered and the offsets would
+    * be garbage. (Found as a real row-loss bug by SoakCheck's manifest
     * cross-check when the materialization pass was removed.) */
   private def assignGlobalSeq(spark: SparkSession, ds: Dataset[FetchTask],
       parts: Int): (Dataset[FetchTask], Dataset[FetchTask]) = {
@@ -590,19 +587,8 @@ object CrawlRound {
       .persist()
     // sorted.rdd reads the InMemoryRelation cache; its partition indices are
     // the range partitions, stable in any consuming plan
-    val sortedRdd = sorted.rdd
-    val counts = traced("politeness+sequence")(
-      sortedRdd.mapPartitionsWithIndex { (pid, it) =>
-        Iterator.single((pid, it.size.toLong))
-      }.collect().sortBy(_._1))
-    val starts = counts.scanLeft((0, 0L)) { case ((_, acc), (pid, n)) => (pid, acc + n) }
-      .sliding(2).collect { case Array((_, st), (pid, _)) => pid -> st }.toMap
-    val bc = spark.sparkContext.broadcast(starts)
-    val out = spark.createDataset(sortedRdd.mapPartitionsWithIndex { (pid, it) =>
-      var s = bc.value.getOrElse(pid, 0L)
-      it.map { t => val u = t.copy(seq = s); s += 1; u }
-    })
-    (out, sorted)
+    val indexed = traced("politeness+sequence")(sorted.rdd.zipWithIndex())
+    (spark.createDataset(indexed.map { case (t, i) => t.copy(seq = i) }), sorted)
   }
 
   /** Deterministic manifest: fixed key order, no wall-clock fields. */

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -49,39 +49,8 @@ object Dedup {
   /** MinHash+LSH candidate pairs with signature-estimated Jaccard ≥ threshold.
     * Returns (doc_a, doc_b, est_jaccard), doc_a < doc_b, distinct. */
   def minHashPairs(docs: DataFrame, threshold: Double = 0.7,
-      maxBucket: Int = 64): DataFrame = {
-    val idx = minHashIndex(docs)
-    val exploded = idx.select(col("doc_id"), col("sig"),
-      posexplode(col("bands")).as(Seq("band", "band_key")))
-    // bucket join: docs sharing a band key; bucket capped for skew safety
-    val buckets = exploded
-      .withColumn("rn", row_number().over(
-        Window.partitionBy(col("band"), col("band_key")).orderBy(col("doc_id"))))
-      .filter(col("rn") <= maxBucket)
-    val a = buckets.select(col("band"), col("band_key"),
-      col("doc_id").as("doc_a"), col("sig").as("sig_a"))
-    val b = buckets.select(col("band"), col("band_key"),
-      col("doc_id").as("doc_b"), col("sig").as("sig_b"))
-    // Score in the bucket-join projection, then dedup NARROW rows (r06):
-    // est_jaccard is a pure function of the pair (the sig columns are pure
-    // functions of the doc ids), so each shared-band occurrence scores
-    // identically and first() is deterministic. The pair dedup then groups
-    // 24-byte (doc_a, doc_b, est_jaccard) rows in a codegen HashAggregate —
-    // dropDuplicates("doc_a","doc_b") used to carry BOTH 64-long signature
-    // arrays through its exchange into a SortAggregate (~40× the shuffle
-    // bytes, sorts on both sides). The re-added per-shared-band SigAgree
-    // evaluations are map-side, parallel, and bounded by the band count;
-    // the threshold filter runs pre-dedup (duplicates all pass or all
-    // fail), shrinking the aggregate input too. Output identical.
-    a.join(b, Seq("band", "band_key"))
-      .filter(col("doc_a") < col("doc_b"))
-      .select(col("doc_a"), col("doc_b"),
-        org.apache.spark.sql.graftexpr.SigAgree(col("sig_a"), col("sig_b"))
-          .as("est_jaccard"))
-      .filter(col("est_jaccard") >= threshold)
-      .groupBy(col("doc_a"), col("doc_b"))
-      .agg(first(col("est_jaccard")).as("est_jaccard"))
-  }
+      maxBucket: Int = 64): DataFrame =
+    bandPairs(minHashIndex(docs), col("doc_a") < col("doc_b"), threshold, maxBucket)
 
   /** Incremental near-dup: candidate pairs that TOUCH a new batch, against a
     * persisted `minHashIndex` of the existing corpus — the form a 100 TB
@@ -97,22 +66,40 @@ object Dedup {
     val all = existingIndex.select(col("doc_id"), col("sig"), col("bands"))
       .withColumn("is_new", lit(false))
       .unionByName(minHashIndex(newDocs).withColumn("is_new", lit(true)))
-    val exploded = all.select(col("doc_id"), col("sig"), col("is_new"),
-      posexplode(col("bands")).as(Seq("band", "band_key")))
+    bandPairs(all, col("doc_a") < col("doc_b") && (col("is_new_a") || col("is_new_b")),
+      threshold, maxBucket)
+  }
+
+  /** The band-pair pipeline over a MinHash index (doc_id, sig, bands, plus
+    * any carried columns): docs sharing a (band, band_key) bucket, bucket
+    * capped at `maxBucket` for skew safety, joined pairwise — each side's
+    * `doc_id` as doc_a/doc_b and every other column `c` as c_a/c_b — then
+    * filtered by `pair`, scored and thresholded.
+    *
+    * Score in the bucket-join projection, then dedup NARROW rows (r06):
+    * est_jaccard is a pure function of the pair (the sig columns are pure
+    * functions of the doc ids), so each shared-band occurrence scores
+    * identically and first() is deterministic. The pair dedup then groups
+    * 24-byte (doc_a, doc_b, est_jaccard) rows in a codegen HashAggregate —
+    * dropDuplicates("doc_a","doc_b") used to carry BOTH 64-long signature
+    * arrays through its exchange into a SortAggregate (~40× the shuffle
+    * bytes, sorts on both sides). The re-added per-shared-band SigAgree
+    * evaluations are map-side, parallel, and bounded by the band count;
+    * the threshold filter runs pre-dedup (duplicates all pass or all
+    * fail), shrinking the aggregate input too. Output identical. */
+  private def bandPairs(index: DataFrame, pair: Column, threshold: Double,
+      maxBucket: Int): DataFrame = {
+    val carried = index.columns.filterNot(_ == "bands").toSeq
+    val exploded = index.select(carried.map(col) :+
+      posexplode(col("bands")).as(Seq("band", "band_key")): _*)
     val buckets = exploded
       .withColumn("rn", row_number().over(
         Window.partitionBy(col("band"), col("band_key")).orderBy(col("doc_id"))))
       .filter(col("rn") <= maxBucket)
-    val a = buckets.select(col("band"), col("band_key"),
-      col("doc_id").as("doc_a"), col("sig").as("sig_a"), col("is_new").as("new_a"))
-    val b = buckets.select(col("band"), col("band_key"),
-      col("doc_id").as("doc_b"), col("sig").as("sig_b"), col("is_new").as("new_b"))
-    // same score-first narrow pair dedup as minHashPairs (r06): SigAgree in
-    // the join projection (pure function of the pair → duplicates identical),
-    // threshold filter pre-dedup, then a narrow hash aggregate — instead of
-    // a SortAggregate shipping both signature arrays through the exchange
-    a.join(b, Seq("band", "band_key"))
-      .filter(col("doc_a") < col("doc_b") && (col("new_a") || col("new_b")))
+    def side(s: String): DataFrame = buckets.select(col("band") +: col("band_key") +:
+      carried.map(c => col(c).as(if (c == "doc_id") s"doc_$s" else s"${c}_$s")): _*)
+    side("a").join(side("b"), Seq("band", "band_key"))
+      .filter(pair)
       .select(col("doc_a"), col("doc_b"),
         org.apache.spark.sql.graftexpr.SigAgree(col("sig_a"), col("sig_b"))
           .as("est_jaccard"))

@@ -116,9 +116,9 @@ object LinkGraph {
     * (priority DESC first key, §8.3) shifts toward high-rank pages.
     *
     * Scale shape: one hash join frontier⋈ranks on url, then the global
-    * percentile is assigned via range-repartition + per-partition offsets —
-    * the same no-single-reducer idiom as the crawler's global sequence
-    * (CrawlRound.assignGlobalSeq; the offsets collect is O(partitions)).
+    * percentile is assigned via range-repartition + `zipWithIndex` — the
+    * same no-single-reducer idiom as the crawler's global sequence
+    * (CrawlRound.assignGlobalSeq).
     * Determinism: sort key (rank DESC, url_hash) is unique per frontier, so
     * bucket assignment is independent of partition boundaries.
     *
@@ -147,23 +147,11 @@ object LinkGraph {
         .sortWithinPartitions(col("rank").desc, col("url_hash"))
         .drop("rank").as[FrontierEntry]
         .persist()
-      val rdd = sorted.rdd
-      val counts = rdd.mapPartitionsWithIndex { (pid, it) =>
-        Iterator.single((pid, it.size.toLong))
-      }.collect().sortBy(_._1)
-      val starts = counts.scanLeft((0, 0L)) { case ((_, acc), (pid, c)) => (pid, acc + c) }
-        .sliding(2).collect { case Array((_, st), (pid, _)) => pid -> st }.toMap
-      val bc = spark.sparkContext.broadcast(starts)
       val nb = buckets.toLong
       val total = n
-      val rebucketed = spark.createDataset(rdd.mapPartitionsWithIndex { (pid, it) =>
-        var pos = bc.value.getOrElse(pid, 0L)
-        it.map { e =>
-          // pos 0 (best rank) → priority buckets-1; last → 0
-          val p = (nb - 1L - pos * nb / total).toInt
-          pos += 1
-          e.copy(priority = p)
-        }
+      // pos 0 (best rank) → priority buckets-1; last → 0
+      val rebucketed = spark.createDataset(sorted.rdd.zipWithIndex().map {
+        case (e, pos) => e.copy(priority = (nb - 1L - pos * nb / total).toInt)
       })
       (rebucketed.unionByName(unranked), Seq(joined, sorted))
     }

@@ -59,6 +59,13 @@ object Similarity {
       .crossJoin(q)
       .filter(col("neighbor_id") =!= col("query_id"))
       .withColumn("cosine", cos)
+    topK(scored, k)
+  }
+
+  /** The top-k tail every ANN form ends in: per query, the k best
+    * (query_id, neighbor_id, cosine) rows by (cosine desc, neighbor_id),
+    * ranked 1..k. */
+  private def topK(scored: DataFrame, k: Int): DataFrame = {
     val w = Window.partitionBy(col("query_id"))
       .orderBy(col("cosine").desc, col("neighbor_id").asc)
     scored.withColumn("rank", row_number().over(w))
@@ -231,11 +238,7 @@ object Similarity {
     val scored = indexed.join(q, Seq("ivf_list"))
       .filter(col("neighbor_id") =!= col("query_id"))
       .withColumn("cosine", cosine(col("q_emb"), col("c_emb")))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("neighbor_id").asc)
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("neighbor_id"), col("cosine"), col("rank"))
+    topK(scored, k)
   }
 
   /** IVF-vs-exact cross-check report, one row per query:
@@ -337,10 +340,6 @@ object Similarity {
       .repartition(col("query_id"))
       .groupBy(col("query_id"), col("neighbor_id"))
       .agg(first(col("cosine")).as("cosine"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("neighbor_id").asc)
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("neighbor_id"), col("cosine"), col("rank"))
+    topK(scored, k)
   }
 }

@@ -1,6 +1,6 @@
 package graft.sources
 
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.nio.file.{Files, Path, StandardCopyOption}
 
 /** The snapshot-visibility seam of [[SnapshotStore]]: everything before
   * `publish` writes to an invisible staging location; `publish` is the ONLY
@@ -54,20 +54,11 @@ trait CommitProtocol {
 object PosixRenameCommit extends CommitProtocol {
   override def publish(root: Path, staged: Path, k: Int): Unit = {
     val target = root.resolve(s"snapshot-$k")
-    if (Files.exists(target)) deleteRecursively(target) // re-run of uncommitted round
+    SnapshotStore.deleteRecursively(target) // re-run of uncommitted round
     Files.move(staged, target, StandardCopyOption.ATOMIC_MOVE)
     val headTmp = root.resolve(".HEAD.tmp")
     Files.writeString(headTmp, k.toString)
     Files.move(headTmp, root.resolve("HEAD"), StandardCopyOption.ATOMIC_MOVE,
       StandardCopyOption.REPLACE_EXISTING)
-  }
-
-  private def deleteRecursively(p: Path): Unit = {
-    if (Files.isDirectory(p)) {
-      val s = Files.list(p)
-      try s.forEach(c => deleteRecursively(c))
-      finally s.close()
-    }
-    Files.deleteIfExists(p)
   }
 }

@@ -118,7 +118,7 @@ final class SnapshotStore(spark: SparkSession, val root: String,
   final class Pending private[SnapshotStore] (k: Int) {
     private val dir = tmpDir(k)
     // a stale tmp dir from a crashed run is invisible garbage — reclaim it
-    if (Files.exists(dir)) deleteRecursively(dir)
+    SnapshotStore.deleteRecursively(dir)
     Files.createDirectories(dir)
 
     def frontierPath: String = dir.resolve("frontier").toString
@@ -139,12 +139,16 @@ final class SnapshotStore(spark: SparkSession, val root: String,
       protocol.publish(Paths.get(root), dir, k)
     }
 
-    def abort(): Unit = if (Files.exists(dir)) deleteRecursively(dir)
+    def abort(): Unit = SnapshotStore.deleteRecursively(dir)
   }
 
   def begin(k: Int): Pending = new Pending(k)
+}
 
-  private def deleteRecursively(p: Path): Unit = {
+object SnapshotStore {
+
+  /** Delete a file or a whole directory tree; a missing path is a no-op. */
+  private[graft] def deleteRecursively(p: Path): Unit = {
     if (Files.isDirectory(p)) {
       val s = Files.list(p)
       try s.forEach(c => deleteRecursively(c))

@@ -65,31 +65,17 @@ object StreamingCrawl {
       .withWatermark("warc_ts", lateness)
       .dropDuplicatesWithinWatermark("url")
 
-  final case class HostState(emitted: Long)
   final case class GateDecision(url: String, host: String, emitted_rank: Long)
 
   /** Stateful per-host politeness gate for a continuously-arriving frontier:
     * each host may emit at most `budget` URLs across the whole stream; state
     * is the per-host emitted count (the streaming analogue of the batch
     * window rank W1). Deterministic within a micro-batch: candidates are
-    * ranked by (priority desc, next_fetch_ts, url_hash) before gating. */
+    * ranked by (priority desc, next_fetch_ts, url_hash) before gating. It is
+    * `politenessGatePerWindow` with a window that never ends. */
   def politenessGate(entries: Dataset[FrontierEntry], budget: Int)
-      : Dataset[GateDecision] = {
-    val spark = entries.sparkSession
-    import spark.implicits._
-    entries.groupByKey(_.host).flatMapGroupsWithState(
-      OutputMode.Append, GroupStateTimeout.NoTimeout)(
-      (host: String, batch: Iterator[FrontierEntry], state: GroupState[HostState]) => {
-        val sorted = batch.toSeq.sortBy(e => (-e.priority, e.next_fetch_ts, e.url_hash))
-        val already = state.getOption.map(_.emitted).getOrElse(0L)
-        val room = math.max(budget - already, 0L).toInt
-        val out = sorted.take(room).zipWithIndex.map { case (e, i) =>
-          GateDecision(e.url, host, already + i + 1)
-        }
-        state.update(HostState(already + out.size))
-        out.iterator
-      })
-  }
+      : Dataset[GateDecision] =
+    politenessGatePerWindow(entries, budget, windowMs = Long.MaxValue)
 
   final case class WindowedHostState(window_id: Long, emitted: Long)
 

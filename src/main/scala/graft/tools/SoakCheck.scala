@@ -23,14 +23,7 @@ object SoakCheck {
     spark.sparkContext.setLogLevel("WARN")
 
     val dir = "/dev/shm/graft-soak/store"
-    def rm(p: java.nio.file.Path): Unit = {
-      if (java.nio.file.Files.isDirectory(p)) {
-        val st = java.nio.file.Files.list(p)
-        try st.forEach(rm) finally st.close()
-      }
-      java.nio.file.Files.deleteIfExists(p)
-    }
-    rm(java.nio.file.Paths.get(dir))
+    SnapshotStore.deleteRecursively(java.nio.file.Paths.get(dir))
     val store = new SnapshotStore(spark, dir)
     val cfg = CrawlConfig(roundCap = 400, compactSeenEvery = 3)
     Crawler.run(spark, store, SyntheticWeb.seeds(20), rounds, cfg)
@@ -51,7 +44,7 @@ object SoakCheck {
       s"${store.loadAllPages(k).count()} pages, ${Crawler.seenSet(spark, store).count()} seen"
     else s"SOAK FAILED: $failures")
     spark.stop()
-    rm(java.nio.file.Paths.get("/dev/shm/graft-soak"))
+    SnapshotStore.deleteRecursively(java.nio.file.Paths.get("/dev/shm/graft-soak"))
     if (failures > 0) sys.exit(1)
   }
 }

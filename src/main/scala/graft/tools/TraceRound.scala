@@ -22,14 +22,7 @@ object TraceRound {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val dir = s"/dev/shm/graft-trace/store-$cpus-$n"
-    def rm(p: java.nio.file.Path): Unit = {
-      if (java.nio.file.Files.isDirectory(p)) {
-        val st = java.nio.file.Files.list(p)
-        try st.forEach(rm) finally st.close()
-      }
-      java.nio.file.Files.deleteIfExists(p)
-    }
-    rm(java.nio.file.Paths.get(dir))
+    SnapshotStore.deleteRecursively(java.nio.file.Paths.get(dir))
     // job-level timeline: per-job wall + the GAP since the previous job
     // ended. Gaps during the timed round are pure driver/serial time
     // (planning, collects, commit, scheduling) — the non-scaling slice the
