@@ -43,10 +43,17 @@ object Hashes {
     v
   }
 
+  private val HexDigits = "0123456789abcdef".toCharArray
+
   def sha256Hex(s: String): String = {
     val d = MessageDigest.getInstance("SHA-256").digest(s.getBytes(UTF_8))
-    val sb = new StringBuilder(64)
-    d.foreach(b => sb.append(f"${b & 0xff}%02x"))
-    sb.toString
+    val hex = new Array[Char](2 * d.length)
+    var i = 0
+    while (i < d.length) {
+      hex(2 * i) = HexDigits((d(i) >> 4) & 0xf)
+      hex(2 * i + 1) = HexDigits(d(i) & 0xf)
+      i += 1
+    }
+    new String(hex)
   }
 }

@@ -102,12 +102,6 @@ object Similarity {
       .select(col("vec_a"), col("vec_b"), col("cosine"))
   }
 
-  /** LSH-bucketed embedding near-dup pairs (the scale path): candidates are
-    * pairs sharing a (table, sig) bucket in ANY of the L tables, then the
-    * exact cosine filter runs on candidates only — no all-pairs join. Recall
-    * < 1 by construction (near-threshold pairs may share no bucket); at high
-    * cosine the collision probability per table is (1−θ/π)^bits, boosted by
-    * the union over tables. Pairs are deduped across tables before scoring. */
   /** Pipeline-facing near-dup pair API: always the bucketed LSH path —
     * callers that need the exact O(n²) baseline must opt into `cosinePairs`
     * explicitly (and pass its row-count guard). Plan-locked no-BNLJ/no-
@@ -116,6 +110,12 @@ object Similarity {
       nBits: Int = 8, nTables: Int = 8, dim: Int = 64): DataFrame =
     cosinePairsLsh(emb, threshold, roundTo, nBits, nTables, dim)
 
+  /** LSH-bucketed embedding near-dup pairs (the scale path): candidates are
+    * pairs sharing a (table, sig) bucket in ANY of the L tables, then the
+    * exact cosine filter runs on candidates only — no all-pairs join. Recall
+    * < 1 by construction (near-threshold pairs may share no bucket); at high
+    * cosine the collision probability per table is (1−θ/π)^bits, boosted by
+    * the union over tables. Pairs are deduped across tables before scoring. */
   def cosinePairsLsh(emb: DataFrame, threshold: Double, roundTo: Int = -1,
       nBits: Int = 8, nTables: Int = 8, dim: Int = 64): DataFrame = {
     val sig = withLshSignatures(emb, nBits, nTables, dim)

@@ -53,7 +53,16 @@ class TextExtractSpec extends AnyFunSuite {
       "x<br/>y<div class=\"z\" data-a='b'>w</div>",
       "x\ny\nw"),
     ("empty input", "", ""),
-    ("tag at EOF", "a<", "a<"))
+    ("tag at EOF", "a<", "a<"),
+    ("entity split by a tag decodes after stripping",
+      "&am<b>p;x",
+      "&x"),
+    ("entity split by a comment and a tag decodes after stripping",
+      "a<!-- c -->&l<i>t;b",
+      "a<b"),
+    ("CR before a block tag joins its newline",
+      "a\r<p>b",
+      "a\nb"))
 
   goldens.foreach { case (name, html, expected) =>
     test(s"golden: $name") {
