@@ -10,7 +10,7 @@ import graft.sources.SnapshotStore
   *
   *   spark-submit --class graft.operators.CrawlMain … \
   *     --base /path/to/store --rounds 5 [--seeds 20] [--host-budget 4]
-  *     [--round-cap 500] [--no-bloom] [--cpus N] [--adaptive-backoff]
+  *     [--round-cap 500] [--cpus N]
   *
   * Runs (or resumes — the store's HEAD decides) the crawl until `rounds`
   * rounds are committed, printing one metrics line per round. On a real
@@ -19,40 +19,31 @@ import graft.sources.SnapshotStore
   */
 object CrawlMain {
   def main(args: Array[String]): Unit = {
-    // valueless flags must be split out BEFORE the pair parse: a bare flag
-    // inside the arg list would shift every later (key, value) pair by one
-    // and silently corrupt the options after it. Anything unrecognized,
-    // a value that looks like a key, or a dangling key fails LOUDLY —
-    // a typo'd option must never silently fall back to a default.
-    val flagNames = Set("no-bloom", "adaptive-backoff")
-    val keyNames = Set("base", "rounds", "seeds", "host-budget", "round-cap",
-      "cpus")
-    val known = keyNames ++ flagNames
+    // Every option is a `--key value` pair. Anything unrecognized, a value
+    // that looks like a key, or a dangling key fails LOUDLY — a typo'd
+    // option must never silently fall back to a default.
+    val known = Set("base", "rounds", "seeds", "host-budget", "round-cap", "cpus")
     def unknown(k: String): Nothing =
       sys.error(s"unknown option '$k' (known: ${known.toSeq.sorted.mkString(", ")})")
     // an unknown --option is named as such before any pairing, so a removed
-    // flag is never misreported as a dangling key
+    // option is never misreported as a dangling key
     args.find(a => a.startsWith("--") && !known.contains(a.drop(2))).foreach(unknown)
-    val (flagArgs, kvArgs) =
-      args.partition(a => a.startsWith("--") && flagNames.contains(a.drop(2)))
-    if (kvArgs.length % 2 != 0)
-      sys.error(s"dangling option at end of: ${kvArgs.mkString(" ")}")
-    val opts = kvArgs.grouped(2).map {
-      case Array(k, v) if k.startsWith("--") && keyNames.contains(k.drop(2)) =>
+    if (args.length % 2 != 0)
+      sys.error(s"dangling option at end of: ${args.mkString(" ")}")
+    val opts = args.grouped(2).map {
+      case Array(k, v) if k.startsWith("--") =>
         if (v.startsWith("--"))
           sys.error(s"option $k is missing its value (got '$v')")
         k.drop(2) -> v
       case Array(k, _) => unknown(k)
-    }.toMap ++ flagArgs.map(a => a.drop(2) -> "true")
+    }.toMap
 
     val base = opts.getOrElse("base", sys.error("--base <dir> required"))
     val rounds = opts.getOrElse("rounds", "3").toInt
     val nSeeds = opts.getOrElse("seeds", "20").toInt
     val cfg = CrawlConfig(
       hostBudget = opts.getOrElse("host-budget", "4").toInt,
-      roundCap = opts.getOrElse("round-cap", "500").toInt,
-      useBloom = !opts.contains("no-bloom"),
-      adaptiveBackoff = opts.contains("adaptive-backoff"))
+      roundCap = opts.getOrElse("round-cap", "500").toInt)
     val cpus = opts.getOrElse("cpus",
       sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
 

@@ -85,7 +85,7 @@ object CrawlRound {
   private def bloomOfHashes(hashes: DataFrame, cfg: CrawlConfig): BloomFilter = {
     val fanIn = math.max(1, math.min(shufflePartitions(hashes.sparkSession), 16))
     hashes.coalesce(fanIn).stat
-      .bloomFilter(hashes.columns.head, cfg.bloomExpectedItems, cfg.bloomFpp)
+      .bloomFilter(hashes.columns.head, cfg.bloomExpectedItems, BloomFpp)
   }
 
   private def bloomBytes(bf: BloomFilter): Array[Byte] = {
@@ -140,9 +140,9 @@ object CrawlRound {
   def initialize(spark: SparkSession, store: SnapshotStore, seedUrls: Seq[String],
       cfg: CrawlConfig): Unit = {
     import spark.implicits._
-    val t0 = roundTs(cfg, 0)
+    val t0 = roundTs(0)
     val seeds = seedUrls.flatMap(UrlCanon.canonical).distinct
-      .map(u => entryFor(u, cfg.seedPriority, t0, 0))
+      .map(u => entryFor(u, SeedPriority, t0, 0))
     writeSnapshotZero(spark, store, spark.createDataset(seeds), cfg)
   }
 
@@ -211,9 +211,9 @@ object CrawlRound {
 
   /** Run round k: consume snapshot k, commit snapshot k+1. */
   def run(spark: SparkSession, store: SnapshotStore, k: Int, cfg: CrawlConfig): RoundResult = {
-    val rts = roundTs(cfg, k)
+    val rts = roundTs(k)
     val g = gate(spark, store, k, rts)
-    val s = sequence(spark, store, k, cfg, rts, g)
+    val s = sequence(spark, cfg, rts, g)
     val staging = new Staging(store.begin(k + 1))
     try {
       val f = fetch(spark, k, s.tasks, staging)
@@ -255,11 +255,11 @@ object CrawlRound {
   }
 
   /** Politeness and sequencing over the allowed rows: W1/W2 per-host
-    * top-budget via the §4.3 two-phase salted top-k, the opt-in adaptive
-    * backoff, the W2 fetch_ts schedule, the §8.3 global round sequence and
-    * the O3 round cap. Everything over budget or cap is re-enqueued (§8.5). */
-  private def sequence(spark: SparkSession, store: SnapshotStore, k: Int,
-      cfg: CrawlConfig, rts: Long, g: Gated): Sequenced = {
+    * top-budget via the §4.3 two-phase salted top-k, the W2 fetch_ts
+    * schedule, the §8.3 global round sequence and the O3 round cap.
+    * Everything over budget or cap is re-enqueued (§8.5). */
+  private def sequence(spark: SparkSession, cfg: CrawlConfig, rts: Long,
+      g: Gated): Sequenced = {
     import spark.implicits._
     val allowed = g.withRobots.filter($"robots_ok")
     val ord: Seq[Column] =
@@ -277,38 +277,8 @@ object CrawlRound {
     val phase1Dropped = ranked.filter($"srank" > cfg.hostBudget).drop("salt", "srank")
     val w2 = Window.partitionBy($"host").orderBy(ord: _*)
     val hostRanked = phase1Kept.withColumn("host_rank", row_number().over(w2)).persist()
-    // opt-in adaptive backoff: hosts over the error-rate threshold in the
-    // PREVIOUS round's pages get half budget (floor 1). The reduced-budget
-    // host list is O(bad hosts) and joined (AQE broadcasts it while small);
-    // phase 1 above still caps at the FULL budget, so its keep-proof is
-    // unaffected (eff_budget <= hostBudget always).
-    // every init path writes a (possibly empty) pages table, so a missing
-    // dir is the only no-signal case — any other failure (corrupt parquet,
-    // schema drift) must propagate, not silently disable the backoff
-    val backoffHosts: Option[DataFrame] =
-      if (!cfg.adaptiveBackoff ||
-          !java.nio.file.Files.exists(java.nio.file.Paths.get(store.pagesPath(k))))
-        None
-      else {
-        val prev = store.loadPages(k).toDF()
-        val reduced = math.max(cfg.hostBudget / 2, 1)
-        Some(prev.groupBy($"host")
-          .agg((sum(when($"status" =!= 200, 1.0).otherwise(0.0)) / count(lit(1)))
-            .as("err_rate"))
-          .filter($"err_rate" > cfg.backoffErrorRate)
-          .select($"host", lit(reduced).as("eff_budget")))
-      }
-    val (budgetKept, budgetDropped) = backoffHosts match {
-      case None =>
-        (hostRanked.filter($"host_rank" <= cfg.hostBudget),
-          hostRanked.filter($"host_rank" > cfg.hostBudget))
-      case Some(bh) =>
-        val withB = hostRanked.join(bh, Seq("host"), "left")
-          .withColumn("eff_budget",
-            coalesce($"eff_budget", lit(cfg.hostBudget)))
-        (withB.filter($"host_rank" <= $"eff_budget").drop("eff_budget"),
-          withB.filter($"host_rank" > $"eff_budget").drop("eff_budget"))
-    }
+    val budgetKept = hostRanked.filter($"host_rank" <= cfg.hostBudget)
+    val budgetDropped = hostRanked.filter($"host_rank" > cfg.hostBudget)
 
     val preTasks = budgetKept
       .withColumn("fetch_ts", lit(rts) + ($"host_rank" - 1) * $"crawl_delay_ms")
@@ -330,7 +300,7 @@ object CrawlRound {
     val deferred = phase1Dropped.select(frontierCols: _*)
       .unionByName(budgetDropped.select(frontierCols: _*))
       .unionByName(capDropped.toDF().select(frontierCols: _*))
-      .withColumn("next_fetch_ts", lit(rts + cfg.hostBudget * cfg.crawlDelayDefaultMs))
+      .withColumn("next_fetch_ts", lit(rts + cfg.hostBudget * CrawlDelayDefaultMs))
       .withColumn("priority", greatest($"priority" - 1, lit(0)))
       .withColumn("retries", $"retries" + 1)
       .as[FrontierEntry].persist()
@@ -599,6 +569,6 @@ object CrawlRound {
       s""""links_deduped":${m.links_deduped},"new_urls":${m.new_urls},""" +
       s""""frontier_size":${m.frontier_size},"seen_size":${m.seen_size},""" +
       s""""host_budget":${cfg.hostBudget},"round_cap":${cfg.roundCap},""" +
-      s""""crawl_delay_default_ms":${cfg.crawlDelayDefaultMs}}"""
+      s""""crawl_delay_default_ms":$CrawlDelayDefaultMs}"""
   }
 }

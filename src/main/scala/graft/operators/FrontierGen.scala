@@ -21,8 +21,7 @@ object FrontierGen {
   def init(spark: SparkSession, store: SnapshotStore, n: Long,
       cfg: CrawlConfig, seed: Long = 777L, spreadRounds: Int = 0): Long = {
     import spark.implicits._
-    val t0 = roundTs(cfg, 0)
-    val interval = cfg.roundIntervalMs
+    val t0 = roundTs(0)
     val spread = spreadRounds
     val entries = spark.range(n).map { i =>
       val u = SyntheticWeb.urlFor(Hashes.mix(seed, i))
@@ -30,7 +29,7 @@ object FrontierGen {
       val prio = math.floorMod(Hashes.mix(h, 55), 10L).toInt
       val due =
         if (spread <= 0) t0
-        else t0 + math.floorMod(Hashes.mix(h, 77), spread.toLong) * interval
+        else t0 + math.floorMod(Hashes.mix(h, 77), spread.toLong) * RoundIntervalMs
       CrawlRound.entryFor(u, prio, due, 0)
     }.dropDuplicates("url_hash_hi", "url_hash_lo").persist()
 

@@ -84,7 +84,7 @@ object Similarity {
     * (one count pass, then require) so a pipeline cannot drift into an
     * n² broadcast at corpus scale by accident — the same discipline as the
     * robots-gate broadcast threshold. Raise it only for a deliberate
-    * baseline run; use `nearDupPairs`/`cosinePairsLsh` in pipelines. */
+    * baseline run; use `cosinePairsLsh` in pipelines. */
   def cosinePairs(emb: DataFrame, threshold: Double,
       roundTo: Int = -1, maxRows: Long = 1000000L): DataFrame = {
     val n = emb.count()
@@ -101,14 +101,6 @@ object Similarity {
       .filter(col("cosine") >= threshold)
       .select(col("vec_a"), col("vec_b"), col("cosine"))
   }
-
-  /** Pipeline-facing near-dup pair API: always the bucketed LSH path —
-    * callers that need the exact O(n²) baseline must opt into `cosinePairs`
-    * explicitly (and pass its row-count guard). Plan-locked no-BNLJ/no-
-    * cartesian in PlanShapeSpec. */
-  def nearDupPairs(emb: DataFrame, threshold: Double, roundTo: Int = -1,
-      nBits: Int = 8, nTables: Int = 8, dim: Int = 64): DataFrame =
-    cosinePairsLsh(emb, threshold, roundTo, nBits, nTables, dim)
 
   /** LSH-bucketed embedding near-dup pairs (the scale path): candidates are
     * pairs sharing a (table, sig) bucket in ANY of the L tables, then the

@@ -41,14 +41,6 @@ object Model {
       url: String,
       first_seen_round: Int)
 
-  /** Per-host robots rules (RFC 9309 semantics via graft.core.Robots). */
-  final case class RobotsEntry(
-      host: String,
-      fetched_ts: Long,
-      crawl_delay_ms: Long,
-      allow: Seq[String],
-      disallow: Seq[String])
-
   /** A politeness-gated fetch scheduled for this round. `host_rank` is the
     * 1-based per-host rank; `fetch_ts = round_ts + (host_rank-1)*crawl_delay`
     * (SURVEY.md §8.5). `seq` is the 0-based global round sequence over the
@@ -114,15 +106,11 @@ object Model {
       frontier_size: Long,
       seen_size: Long)
 
-  /** Crawl configuration (FIXTURES.md §3 budget.json). All knobs pinned —
-    * they are part of the normative spec the goldens lock. */
+  /** Crawl configuration (FIXTURES.md §3 budget.json): the knobs a caller
+    * sets. The goldens lock the defaults. */
   final case class CrawlConfig(
       hostBudget: Int = 4,
-      crawlDelayDefaultMs: Long = 1000L,
       roundCap: Int = 500,
-      seedPriority: Int = 5,
-      roundIntervalMs: Long = 3600L * 1000,
-      baseTs: Long = 1704067200000L, // 2024-01-01T00:00:00Z
       // every host's politeness top-k runs in two phases: a per-(host,
       // salt) top-budget with salt = pmod(url_hash, saltBuckets), then the
       // per-host top-budget over the survivors, so one hot host cannot skew
@@ -138,19 +126,21 @@ object Model {
       useBloom: Boolean = true,
       // sizing of the one broadcast URL-seen bloom filter; a resumed crawl
       // must keep it (mergeInPlace needs identical bit-array sizes)
-      bloomExpectedItems: Long = 1L << 20,
-      bloomFpp: Double = 0.01,
-      // opt-in adaptive politeness: a host whose fetch-error rate in the
-      // PREVIOUS round exceeded backoffErrorRate gets half the host budget
-      // this round (floor 1) — the standard crawler reaction to failing /
-      // throttling hosts. Off by default: the goldens pin the fixed-budget
-      // behavior, and with the threshold never exceeded the crawl is
-      // byte-identical (equivalence-tested).
-      adaptiveBackoff: Boolean = false,
-      backoffErrorRate: Double = 0.5)
+      bloomExpectedItems: Long = 1L << 20)
+
+  // Pinned spec values (FIXTURES.md §3 budget.json) that no caller varies.
+
+  /** Priority of every seed entry in snapshot 0. */
+  val SeedPriority: Int = 5
+  /** Re-enqueue spacing unit: a deferred entry's next_fetch_ts is
+    * round_ts + hostBudget * CrawlDelayDefaultMs. */
+  val CrawlDelayDefaultMs: Long = 1000L
+  val RoundIntervalMs: Long = 3600L * 1000
+  val BaseTs: Long = 1704067200000L // 2024-01-01T00:00:00Z
+  /** Target false-positive rate of the URL-seen bloom filter. */
+  val BloomFpp: Double = 0.01
 
   /** round_ts(k) — rounds tick on a fixed cadence so deferred entries
     * (next_fetch_ts = round_ts + budget*delay) come due by the next round. */
-  def roundTs(cfg: CrawlConfig, round: Int): Long =
-    cfg.baseTs + round.toLong * cfg.roundIntervalMs
+  def roundTs(round: Int): Long = BaseTs + round.toLong * RoundIntervalMs
 }

@@ -6,7 +6,7 @@ import org.apache.spark.sql.SparkSession
 
 import graft.core.SyntheticWeb
 import graft.operators.Crawler
-import graft.plans.Model.CrawlConfig
+import graft.plans.Model.{CrawlConfig, CrawlDelayDefaultMs, SeedPriority}
 import graft.sources.SnapshotStore
 
 /** One-time golden generator (SURVEY.md §5.3): runs the pinned R=5 golden
@@ -49,7 +49,7 @@ object GenGoldens {
 
     Files.writeString(Paths.get(outDir, "seeds.txt"), seeds.mkString("", "\n", "\n"))
     Files.writeString(Paths.get(outDir, "budget.json"),
-      s"""{"host_budget":${cfg.hostBudget},"crawl_delay_default_ms":${cfg.crawlDelayDefaultMs},"round_cap":${cfg.roundCap},"rounds":5,"seed_priority":${cfg.seedPriority}}""" + "\n")
+      s"""{"host_budget":${cfg.hostBudget},"crawl_delay_default_ms":$CrawlDelayDefaultMs,"round_cap":${cfg.roundCap},"rounds":5,"seed_priority":$SeedPriority}""" + "\n")
     println(s"goldens written to $outDir: ${ordering.length} orderings, $n seen, ${shas.length} shas")
     spark.stop()
   }

@@ -14,8 +14,7 @@ class CrawlSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
   import spark.implicits._
 
-  val cfg = CrawlConfig(hostBudget = 4, crawlDelayDefaultMs = 1000L,
-    roundCap = 500, seedPriority = 5)
+  val cfg = CrawlConfig(hostBudget = 4, roundCap = 500)
   val seeds = SyntheticWeb.seeds(20)
   val Rounds = 5
 
@@ -257,7 +256,7 @@ class CrawlSpec extends AnyFunSuite {
   }
 
   test("snapshot 0 URL-seen filter is exactly the canonical seeds' xxh64") {
-    val bf = org.apache.spark.util.sketch.BloomFilter.create(cfg.bloomExpectedItems, cfg.bloomFpp)
+    val bf = org.apache.spark.util.sketch.BloomFilter.create(cfg.bloomExpectedItems, BloomFpp)
     seeds.flatMap(UrlCanon.canonical).distinct.foreach(u => bf.putLong(Hashes.xxh64(u)))
     val want = new java.io.ByteArrayOutputStream()
     bf.writeTo(want)

@@ -125,21 +125,18 @@ class SimilaritySpec extends AnyFunSuite {
     assert(recall >= 0.10, s"near-dup recall collapsed: $recall")
   }
 
-  test("cosinePairs row-count guard trips; nearDupPairs takes the LSH path") {
+  test("cosinePairs row-count guard trips; cosinePairsLsh takes the LSH path") {
     // the exact baseline refuses a corpus over its declared bound
     val e = intercept[IllegalArgumentException] {
       Similarity.cosinePairs(emb, threshold = 0.3, roundTo = 6, maxRows = 3L)
     }
     assert(e.getMessage.contains("cosinePairsLsh"))
-    // the pipeline-facing API is the bucketed path: same rows as
-    // cosinePairsLsh and no broadcast-NLJ / cartesian in the physical plan
-    val nd = Similarity.nearDupPairs(emb, threshold = 0.3, roundTo = 6)
-    val physical = nd.queryExecution.executedPlan.toString
+    // the pipeline path is bucketed: no broadcast-NLJ / cartesian in the
+    // physical plan
+    val physical = Similarity.cosinePairsLsh(emb, threshold = 0.3, roundTo = 6)
+      .queryExecution.executedPlan.toString
     assert(!physical.contains("BroadcastNestedLoopJoin"), physical)
     assert(!physical.contains("CartesianProduct"), physical)
-    val lsh = Similarity.cosinePairsLsh(emb, threshold = 0.3, roundTo = 6)
-      .select($"vec_a", $"vec_b").as[(Long, Long)].collect().toSet
-    assert(nd.select($"vec_a", $"vec_b").as[(Long, Long)].collect().toSet === lsh)
   }
 
   test("ivfCrossCheck: zero score mismatches (theorem) + recall floor, sf0.001 and sf0.1") {

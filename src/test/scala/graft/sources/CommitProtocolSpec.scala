@@ -35,6 +35,36 @@ class CommitProtocolSpec extends AnyFunSuite {
     assert(store.head.contains(2))
   }
 
+  test("a failed publish aborts its round; a resume matches an uninterrupted crawl") {
+    val cfg = CrawlConfig(roundCap = 50)
+    val seeds = SyntheticWeb.seeds(5)
+    val failing = new CommitProtocol {
+      override def publish(root: Path, staged: Path, k: Int): Unit = {
+        if (k == 2) throw new java.io.IOException("injected publish failure")
+        PosixRenameCommit.publish(root, staged, k)
+      }
+    }
+    val root = tmp()
+    val e = intercept[java.io.IOException] {
+      Crawler.run(spark, new SnapshotStore(spark, root.toString, failing), seeds,
+        rounds = 3, cfg)
+    }
+    assert(e.getMessage == "injected publish failure")
+    // the round drained its writes and dropped its staging dir
+    val resumed = new SnapshotStore(spark, root.toString)
+    assert(resumed.head.contains(1))
+    assert(!Files.exists(root.resolve(".tmp-2")))
+    Crawler.run(spark, resumed, seeds, rounds = 3, cfg)
+    assert(resumed.head.contains(3))
+
+    val clean = new SnapshotStore(spark, tmp().toString)
+    Crawler.run(spark, clean, seeds, rounds = 3, cfg)
+    assert(Crawler.ordering(spark, resumed).collect().toSeq ===
+      Crawler.ordering(spark, clean).collect().toSeq)
+    assert(Crawler.seenDigest(spark, resumed) === Crawler.seenDigest(spark, clean))
+    (1 to 3).foreach(k => assert(resumed.manifest(k) === clean.manifest(k), s"manifest $k"))
+  }
+
   test("posix publish is all-or-nothing: a staged dir is invisible until publish") {
     val root = tmp()
     val store = new SnapshotStore(spark, root.toString)
