@@ -41,14 +41,6 @@ object CrawlRound {
 
   final case class RoundResult(round: Int, metrics: RoundMetrics)
 
-  private val Trace = sys.env.contains("SPARK_GRAFT_TRACE")
-  private def traced[T](name: String)(body: => T): T = {
-    val t0 = System.nanoTime()
-    val r = body
-    if (Trace) System.err.println(f"[trace] $name: ${(System.nanoTime() - t0) / 1e9}%.2fs")
-    r
-  }
-
   private def childPriority(parent: Int): Int = math.max(parent - 1, 0)
 
   private def shufflePartitions(spark: SparkSession): Int =
@@ -166,66 +158,100 @@ object CrawlRound {
   }
 
   /** `gate` output: snapshot k's not-due frontier rows, and the due rows
-    * with their robots verdict and crawl delay (persisted). */
+    * with their robots verdict and crawl delay (cached). */
   private final case class Gated(notDue: Dataset[FrontierEntry],
       withRobots: DataFrame) {
     def frontierCols: Seq[Column] = notDue.columns.map(col).toSeq
   }
 
-  /** `sequence` output: this round's fetch tasks, the persisted re-enqueues,
-    * and the politeness caches released at commit. */
+  /** `sequence` output: this round's fetch tasks and the cached re-enqueues. */
   private final case class Sequenced(tasks: Dataset[FetchTask],
-      deferred: Dataset[FrontierEntry], ranked: DataFrame, hostRanked: DataFrame,
-      seqParent: Dataset[FetchTask])
+      deferred: Dataset[FrontierEntry])
 
-  /** `fetch` output: the persisted fetch results, the round totals, and the
-    * already-launched pages and lineage writes. */
+  /** `fetch` output: the cached fetch results and the round totals. */
   private final case class Fetched(pages: Dataset[FetchResult], n: Long,
-      errors: Long, links: Long, writes: Seq[Future[Unit]])
+      errors: Long, links: Long)
 
-  /** `dedup` output: the exact seen set, the persisted in-batch link
+  /** `dedup` output: the exact seen set, the cached in-batch link
     * candidates and truly-new links, and the previous snapshot's filter. */
   private final case class Deduped(seen: Dataset[SeenUrl], cand: DataFrame,
       trulyNew: DataFrame, prevBloomBytes: () => Array[Byte])
 
   private implicit val ec: ExecutionContext = ExecutionContext.global
 
-  /** Snapshot k+1 while it is staged, plus every job future launched into it.
-    * A failure anywhere between begin and commit DRAINS those futures before
-    * dropping the tmp dir: Scala Futures are not cancellable, and aborting
-    * while a write still runs would race a retry's begin(k+1) deleting the
-    * dir under it. */
-  private final class Staging(val pending: SnapshotStore#Pending) {
+  private val JobDescription = "spark.job.description"
+
+  /** The one owner of everything round k holds between `run`'s open and
+    * close: the staged snapshot k+1, every job future launched into it,
+    * every Dataset the round caches, and the stage name its Spark jobs
+    * carry as their job description. `close` releases all of it on every
+    * path. A round that did not commit first DRAINS its futures, then drops
+    * the tmp dir: Scala Futures are not cancellable, and aborting while a
+    * write still runs would race a retry's begin(k+1) deleting the dir
+    * under it. Only then are the caches unpersisted, and the caller's job
+    * description comes back. */
+  private final class RoundScope(spark: SparkSession, val pending: SnapshotStore#Pending) {
+    private val sc = spark.sparkContext
+    private val callerDescription = sc.getLocalProperty(JobDescription)
     private val launched = ArrayBuffer.empty[Future[Any]]
-    def launch[T](body: => T): Future[T] = {
-      val f = Future(scala.concurrent.blocking(body))
+    private val caches = ArrayBuffer.empty[Dataset[_]]
+    private var committed = false
+
+    /** Runs `body` on the calling thread; its jobs are labelled `name`. */
+    def stage[T](name: String)(body: => T): T = {
+      sc.setJobDescription(name)
+      body
+    }
+
+    /** Starts `body` on a pool thread; its jobs are labelled `name`. Local
+      * properties are per thread, so the body sets the label on its own
+      * thread and clears it there when done. */
+    def launch[T](name: String)(body: => T): Future[T] = {
+      val f = Future(scala.concurrent.blocking {
+        sc.setJobDescription(name)
+        try body finally sc.setJobDescription(null)
+      })
       launched.synchronized { launched += f }
       f
     }
-    def abort(): Unit = {
-      launched.synchronized(launched.toList)
-        .foreach(f => scala.util.Try(Await.ready(f, Duration.Inf)))
-      scala.util.Try(pending.abort())
+
+    /** Persists `ds` for the rest of the round. */
+    def cache[T](ds: Dataset[T]): Dataset[T] = {
+      caches += ds
+      ds.persist()
+    }
+
+    /** Waits for every launched body; the first failed one rethrows. */
+    def awaitLaunched(): Unit =
+      launched.synchronized(launched.toList).foreach(Await.result(_, Duration.Inf))
+
+    def commit(manifestJson: String): Unit = {
+      pending.commit(manifestJson)
+      committed = true
+    }
+
+    def close(): Unit = {
+      if (!committed) {
+        launched.synchronized(launched.toList)
+          .foreach(f => scala.util.Try(Await.ready(f, Duration.Inf)))
+        scala.util.Try(pending.abort())
+      }
+      caches.foreach(_.unpersist(blocking = false))
+      sc.setLocalProperty(JobDescription, callerDescription)
     }
   }
 
   /** Run round k: consume snapshot k, commit snapshot k+1. */
   def run(spark: SparkSession, store: SnapshotStore, k: Int, cfg: CrawlConfig): RoundResult = {
     val rts = roundTs(k)
-    val g = gate(spark, store, k, rts)
-    val s = sequence(spark, cfg, rts, g)
-    val staging = new Staging(store.begin(k + 1))
+    val scope = new RoundScope(spark, store.begin(k + 1))
     try {
-      val f = fetch(spark, k, s.tasks, staging)
-      val d = dedup(spark, store, k, cfg, f.pages)
-      RoundResult(k, commit(spark, store, k, cfg, rts, staging, g, s, f, d))
-    } catch {
-      case t: Throwable =>
-        // leaving orphaned writes running into the tmp dir would race a
-        // retry's begin(k+1) deleting that dir concurrently
-        staging.abort()
-        throw t
-    }
+      val g = scope.stage("gate")(gate(spark, store, k, rts, scope))
+      val s = scope.stage("sequence")(sequence(spark, cfg, rts, g, scope))
+      val f = scope.stage("fetch")(fetch(spark, k, s.tasks, scope))
+      val d = scope.stage("dedup")(dedup(spark, store, k, cfg, f.pages, scope))
+      RoundResult(k, scope.stage("commit")(commit(spark, store, k, cfg, rts, scope, g, s, f, d)))
+    } finally scope.close()
   }
 
   /** F4 due filter + F2 robots gate. Robots rules come from the per-executor
@@ -237,7 +263,7 @@ object CrawlRound {
     * hence the UDFs. Denied URLs are dropped for good: they stay in the seen
     * set, so they are never re-enqueued either. Pinned behavior. */
   private def gate(spark: SparkSession, store: SnapshotStore, k: Int,
-      rts: Long): Gated = {
+      rts: Long, scope: RoundScope): Gated = {
     import spark.implicits._
     val frontier = store.loadFrontier(k)
     // plain column predicates, pushed into the parquet scan
@@ -247,10 +273,9 @@ object CrawlRound {
       hostRules(host).allowed(UrlCanon.pathOf(url))
     }
     val delayU = udf { (host: String) => hostRules(host).crawlDelayMs }
-    val withRobots = due
+    val withRobots = scope.cache(due
       .withColumn("crawl_delay_ms", delayU($"host"))
-      .withColumn("robots_ok", robotsOkU($"host", $"url"))
-      .persist()
+      .withColumn("robots_ok", robotsOkU($"host", $"url")))
     Gated(notDue, withRobots)
   }
 
@@ -259,7 +284,7 @@ object CrawlRound {
     * schedule, the §8.3 global round sequence and the O3 round cap.
     * Everything over budget or cap is re-enqueued (§8.5). */
   private def sequence(spark: SparkSession, cfg: CrawlConfig, rts: Long,
-      g: Gated): Sequenced = {
+      g: Gated, scope: RoundScope): Sequenced = {
     import spark.implicits._
     val allowed = g.withRobots.filter($"robots_ok")
     val ord: Seq[Column] =
@@ -272,11 +297,11 @@ object CrawlRound {
     val salted = allowed.withColumn("salt",
       pmod($"url_hash", lit(cfg.saltBuckets.toLong)).cast("int"))
     val w1 = Window.partitionBy($"host", $"salt").orderBy(ord: _*)
-    val ranked = salted.withColumn("srank", row_number().over(w1)).persist()
+    val ranked = scope.cache(salted.withColumn("srank", row_number().over(w1)))
     val phase1Kept = ranked.filter($"srank" <= cfg.hostBudget).drop("salt", "srank")
     val phase1Dropped = ranked.filter($"srank" > cfg.hostBudget).drop("salt", "srank")
     val w2 = Window.partitionBy($"host").orderBy(ord: _*)
-    val hostRanked = phase1Kept.withColumn("host_rank", row_number().over(w2)).persist()
+    val hostRanked = scope.cache(phase1Kept.withColumn("host_rank", row_number().over(w2)))
     val budgetKept = hostRanked.filter($"host_rank" <= cfg.hostBudget)
     val budgetDropped = hostRanked.filter($"host_rank" > cfg.hostBudget)
 
@@ -289,22 +314,21 @@ object CrawlRound {
       .as[FetchTask]
     // `sequenced`'s range partitions become the fetch tasks: one per shuffle
     // partition (more tasks per core measured slower at local[16])
-    val (sequenced, seqParent) =
-      assignGlobalSeq(spark, preTasks, shufflePartitions(spark))
+    val sequenced = assignGlobalSeq(spark, preTasks, shufflePartitions(spark), scope)
     val tasks = sequenced.filter($"seq" < cfg.roundCap)
     val capDropped = sequenced.filter($"seq" >= cfg.roundCap)
 
     // deferred = over-salt ∪ over-budget ∪ over-cap; bumped past this round's
     // schedule window, priority decayed by 1 (floor 0)
     val frontierCols = g.frontierCols
-    val deferred = phase1Dropped.select(frontierCols: _*)
+    val deferred = scope.cache(phase1Dropped.select(frontierCols: _*)
       .unionByName(budgetDropped.select(frontierCols: _*))
       .unionByName(capDropped.toDF().select(frontierCols: _*))
       .withColumn("next_fetch_ts", lit(rts + cfg.hostBudget * CrawlDelayDefaultMs))
       .withColumn("priority", greatest($"priority" - 1, lit(0)))
       .withColumn("retries", $"retries" + 1)
-      .as[FrontierEntry].persist()
-    Sequenced(tasks, deferred, ranked, hostRanked, seqParent)
+      .as[FrontierEntry])
+    Sequenced(tasks, deferred)
   }
 
   /** Fetch/parse, executor-local: html never leaves this stage. Then the two
@@ -316,10 +340,10 @@ object CrawlRound {
     * with real work removes that wall from both levels. Lineage coalesces to
     * one task: it is O(partitions) rows and was paying a 16-task write. */
   private def fetch(spark: SparkSession, k: Int, tasks: Dataset[FetchTask],
-      staging: Staging): Fetched = {
+      scope: RoundScope): Fetched = {
     import spark.implicits._
     val round = k
-    val fetched: Dataset[FetchResult] = tasks.mapPartitions { it =>
+    val fetched: Dataset[FetchResult] = scope.cache(tasks.mapPartitions { it =>
       it.map { t =>
         val f = SyntheticWeb.fetch(t.url)
         val (text, links) =
@@ -329,7 +353,7 @@ object CrawlRound {
           t.priority, t.next_fetch_ts, t.seq, t.fetch_ts, f.status, text,
           if (f.status == 200) Hashes.sha256Hex(text) else "", links, round)
       }
-    }.persist()
+    })
     // ONE per-partition aggregation serves the round totals AND the S8
     // lineage rows: the dedicated lineage job used to re-scan the fat
     // fetched cache as a third concurrent reader beside the pages write and
@@ -337,22 +361,20 @@ object CrawlRound {
     // bandwidth contention in the post-fetch phase. Partition ids are taken
     // from THIS synchronous scan (the cache's single materializer), never
     // from a downstream consumer (see assignGlobalSeq's warning).
-    val partStats: Array[(Int, Long, Long, Long)] = traced("fetch+parse")(
+    val partStats: Array[(Int, Long, Long, Long)] =
       fetched.groupBy(spark_partition_id().as("pid"))
         .agg(count(lit(1)).as("n"),
           sum(when($"status" =!= 200, 1L).otherwise(0L)).as("errors"),
           coalesce(sum(size($"links")), lit(0L)).as("links"))
-        .as[(Int, Long, Long, Long)].collect())
+        .as[(Int, Long, Long, Long)].collect()
     val lineageRows: Seq[LineageRow] = partStats.sortBy(_._1).toSeq
       .map { case (pid, nRows, errs, _) =>
         LineageRow(k, "fetch_parse", pid, nRows, nRows, errs, 0L) }
-    val writes = Seq(
-      staging.launch(traced("write-pages")(
-        fetched.write.parquet(staging.pending.pagesPath))),
-      staging.launch(traced("write-lineage")(spark.createDataset(lineageRows)
-        .coalesce(1).write.parquet(staging.pending.lineagePath))))
+    scope.launch("write-pages")(fetched.write.parquet(scope.pending.pagesPath))
+    scope.launch("write-lineage")(spark.createDataset(lineageRows)
+      .coalesce(1).write.parquet(scope.pending.lineagePath))
     Fetched(fetched, partStats.map(_._2).sum, partStats.map(_._3).sum,
-      partStats.map(_._4).sum, writes)
+      partStats.map(_._4).sum)
   }
 
   /** Link dedup: canonical link candidates (LinkExtract) hashed and merged
@@ -360,9 +382,9 @@ object CrawlRound {
     * Filter-clear ⇒ definitely new (no false negatives) ⇒ skips the join;
     * filter-hit ⇒ maybe seen ⇒ exact anti-join. */
   private def dedup(spark: SparkSession, store: SnapshotStore, k: Int,
-      cfg: CrawlConfig, pages: Dataset[FetchResult]): Deduped = {
+      cfg: CrawlConfig, pages: Dataset[FetchResult], scope: RoundScope): Deduped = {
     import spark.implicits._
-    val cand = pages.filter($"status" === 200)
+    val cand = scope.cache(pages.filter($"status" === 200)
       .flatMap(r => r.links.map(l => (l, childPriority(r.priority))))
       .map { case (u, p) =>
         val (hi, lo) = Hashes.murmur128(u)
@@ -373,8 +395,7 @@ object CrawlRound {
       // functions of the url so min() just picks the (single) value
       .groupBy($"url_hash_hi", $"url_hash_lo")
       .agg(min($"url").as("url"), min($"url_hash").as("url_hash"),
-        min($"host").as("host"), max($"priority").as("priority"))
-      .persist()
+        min($"host").as("host"), max($"priority").as("priority")))
     // cand is counted at commit, AFTER the seen-dedup jobs: their first scan
     // of `cand` populates the cache (the flatMap + in-batch-merge shuffle
     // runs exactly once either way), so counting here first would add a
@@ -391,9 +412,8 @@ object CrawlRound {
     // mutates; the broadcast copy must stay immutable).
     val seen = store.loadSeen(k)
     lazy val prevBloomBytes: Array[Byte] =
-      store.loadBloom(k).map(bloomBytes).getOrElse(
-        traced("bloom-cold-rebuild")(bloomBytes(
-          bloomOfHashes(seen.select(xxh64OfUrl($"url").as("h")), cfg))))
+      store.loadBloom(k).map(bloomBytes).getOrElse(bloomBytes(
+        bloomOfHashes(seen.select(xxh64OfUrl($"url").as("h")), cfg)))
     // Filter hits are a SUSPECT set (a small fraction of candidates by
     // construction) and take the scan-form join; the unfiltered probe
     // (useBloom=false) is O(candidates) and takes the shuffle form.
@@ -404,14 +424,14 @@ object CrawlRound {
     // accumulator updates from another job's still-running tasks would be
     // missing, silently undercounting n_new (and with it the frontier/seen
     // manifest arithmetic every later round inherits).
-    val trulyNew =
-      (if (cfg.useBloom) {
+    val trulyNew = scope.cache(
+      if (cfg.useBloom) {
         val bfb = spark.sparkContext.broadcast(bloomOf(prevBloomBytes))
         val mightContain = udf((h: Long) => bfb.value.mightContainLong(h))
         val suspects = cand.filter(mightContain($"url_hash"))
         val definitelyNew = cand.filter(!mightContain($"url_hash"))
         seenAntiJoinScan(seen.toDF(), suspects).unionByName(definitelyNew)
-      } else seenAntiJoinShuffle(seen.toDF(), cand)).persist()
+      } else seenAntiJoinShuffle(seen.toDF(), cand))
     Deduped(seen, cand, trulyNew, () => prevBloomBytes)
   }
 
@@ -421,8 +441,7 @@ object CrawlRound {
   private def writeFilter(spark: SparkSession, cfg: CrawlConfig, d: Deduped,
       pending: SnapshotStore#Pending): Unit = {
     import spark.implicits._
-    val deltaBloom =
-      traced("bloom-build")(bloomOfHashes(d.trulyNew.select($"url_hash"), cfg))
+    val deltaBloom = bloomOfHashes(d.trulyNew.select($"url_hash"), cfg)
     val prevBloom = bloomOf(d.prevBloomBytes())
     prevBloom.mergeInPlace(deltaBloom)
     pending.writeBloom(prevBloom)
@@ -433,10 +452,10 @@ object CrawlRound {
     * already-cached inputs and run as CONCURRENT Spark jobs beside the
     * pages/lineage writes already in flight; the manifest is written last. */
   private def commit(spark: SparkSession, store: SnapshotStore, k: Int,
-      cfg: CrawlConfig, rts: Long, staging: Staging, g: Gated, s: Sequenced,
+      cfg: CrawlConfig, rts: Long, scope: RoundScope, g: Gated, s: Sequenced,
       f: Fetched, d: Deduped): RoundMetrics = {
     import spark.implicits._
-    val pending = staging.pending
+    val pending = scope.pending
     val newEntries = d.trulyNew.select(
         $"url", $"url_hash", $"url_hash_hi", $"url_hash_lo", $"host", $"priority",
         lit(rts).as("next_fetch_ts"), lit(k + 1).as("discovered_round"),
@@ -448,24 +467,19 @@ object CrawlRound {
     // Persisted because the range write needs two passes (boundary sampling +
     // the shuffle itself) and must not recompute the union branches.
     val nextFrontier =
-      g.notDue.unionByName(s.deferred).unionByName(newEntries).persist()
+      scope.cache(g.notDue.unionByName(s.deferred).unionByName(newEntries))
     val newSeen = d.trulyNew.select($"url_hash_hi", $"url_hash_lo", $"url",
       lit(k + 1).as("first_seen_round")).as[SeenUrl]
 
-    val writes = f.writes ++ Seq(
-      staging.launch(traced("write-frontier")(
-        orderedFrontierWrite(nextFrontier, pending.frontierPath))),
-      staging.launch(traced("write-seen")(
-        newSeen.write.parquet(pending.seenDeltaPath))),
-      staging.launch(writeFilter(spark, cfg, d, pending))) ++
-      // periodic compaction: materialize the whole seen set hash-partitioned,
-      // so loadSeen reads one clustered base + a few deltas (SURVEY.md §4.2)
-      (if (cfg.compactSeenEvery > 0 && (k + 1) % cfg.compactSeenEvery == 0)
-        Seq(staging.launch(traced("compact-seen")(
-          d.seen.unionByName(newSeen)
-            .repartition(math.max(shufflePartitions(spark), 1), $"url_hash_hi")
-            .write.parquet(pending.seenFullPath))))
-      else Nil)
+    scope.launch("write-frontier")(orderedFrontierWrite(nextFrontier, pending.frontierPath))
+    scope.launch("write-seen")(newSeen.write.parquet(pending.seenDeltaPath))
+    scope.launch("write-filter")(writeFilter(spark, cfg, d, pending))
+    // periodic compaction: materialize the whole seen set hash-partitioned,
+    // so loadSeen reads one clustered base + a few deltas (SURVEY.md §4.2)
+    if (cfg.compactSeenEvery > 0 && (k + 1) % cfg.compactSeenEvery == 0)
+      scope.launch("compact-seen")(d.seen.unionByName(newSeen)
+        .repartition(math.max(shufflePartitions(spark), 1), $"url_hash_hi")
+        .write.parquet(pending.seenFullPath))
     // The manifest counts launch WITH the write jobs instead of after them:
     // FIFO queues their single-stage cached scans behind the write tasks, so
     // they complete inside the write wall instead of adding a measured
@@ -474,21 +488,19 @@ object CrawlRound {
     // matter which concurrent job materializes the cache first: whichever
     // task computes a partition does so once under the block lock, and every
     // later reader sees the cached rows.
-    val nNewF = staging.launch(traced("n-new")(d.trulyNew.count()))
-    val nCandF = staging.launch(traced("link-candidates")(d.cand.count()))
+    val nNewF = scope.launch("n-new")(d.trulyNew.count())
+    val nCandF = scope.launch("link-candidates")(d.cand.count())
     // The gate counts too: an Observation on withRobots is fulfilled by the
     // FIRST action whose plan contains it, whether or not that action ran
     // the plan. The politeness pass's `Dataset.rdd` is such an action, and
     // with one shuffle partition and AQE off no job has run by then (no
     // range sampling, no eager stage), so due and robots_denied read 0.
-    val gateF = staging.launch(traced("gate-counts")(g.withRobots
+    val gateF = scope.launch("gate-counts")(g.withRobots
       .agg(count(lit(1)),
         // coalesce: sum over an empty gate is NULL, not 0
         coalesce(sum(when($"robots_ok", 1L).otherwise(0L)), lit(0L)))
-      .as[(Long, Long)].head()))
-    Await.result(Future.sequence(writes), Duration.Inf)
-
-    // usually already complete by the time the writes drain
+      .as[(Long, Long)].head())
+    scope.awaitLaunched()
     val (nDue, nAllowed) = Await.result(gateF, Duration.Inf)
     val nNew = Await.result(nNewF, Duration.Inf)
     val nCand = Await.result(nCandF, Duration.Inf)
@@ -501,12 +513,7 @@ object CrawlRound {
     val metrics = RoundMetrics(k, nDue, nDue - nAllowed, f.n,
       nDeferred, f.n, f.errors, f.links, f.links - nCand, nNew,
       nFrontier, nSeen)
-    pending.commit(manifestJson(metrics, cfg))
-
-    Seq(s.ranked, g.withRobots, s.hostRanked, s.seqParent.toDF(),
-      s.deferred.toDF(), f.pages.toDF(), d.cand, d.trulyNew,
-      nextFrontier.toDF())
-      .foreach(_.unpersist(blocking = false))
+    scope.commit(manifestJson(metrics, cfg))
     metrics
   }
 
@@ -536,10 +543,9 @@ object CrawlRound {
     * frontier), so the order — and hence the sequence — is independent of
     * where the range boundaries fall.
     *
-    * Returns (sequenced, cachedParent): the seq assignment is a cheap narrow
-    * map over the cached range-sorted parent, so downstream actions recompute
-    * it from cache instead of paying a dedicated materialization pass. The
-    * caller unpersists `cachedParent` at round end.
+    * The range-sorted parent is cached in `scope`; the seq assignment is a
+    * cheap narrow map over it, so downstream actions recompute it from cache
+    * instead of paying a dedicated materialization pass.
     *
     * `zipWithIndex` offsets each partition by the RDD's OWN partition index,
     * never by `TaskContext.getPartitionId()`: the task partition id is the
@@ -548,17 +554,16 @@ object CrawlRound {
     * be garbage. (Found as a real row-loss bug by SoakCheck's manifest
     * cross-check when the materialization pass was removed.) */
   private def assignGlobalSeq(spark: SparkSession, ds: Dataset[FetchTask],
-      parts: Int): (Dataset[FetchTask], Dataset[FetchTask]) = {
+      parts: Int, scope: RoundScope): Dataset[FetchTask] = {
     import spark.implicits._
-    val sorted = ds
+    val sorted = scope.cache(ds
       .repartitionByRange(math.max(parts, 1), col("priority").desc,
         col("next_fetch_ts"), col("url_hash"))
-      .sortWithinPartitions(col("priority").desc, col("next_fetch_ts"), col("url_hash"))
-      .persist()
+      .sortWithinPartitions(col("priority").desc, col("next_fetch_ts"), col("url_hash")))
     // sorted.rdd reads the InMemoryRelation cache; its partition indices are
     // the range partitions, stable in any consuming plan
-    val indexed = traced("politeness+sequence")(sorted.rdd.zipWithIndex())
-    (spark.createDataset(indexed.map { case (t, i) => t.copy(seq = i) }), sorted)
+    val indexed = sorted.rdd.zipWithIndex()
+    spark.createDataset(indexed.map { case (t, i) => t.copy(seq = i) })
   }
 
   /** Deterministic manifest: fixed key order, no wall-clock fields. */

@@ -123,21 +123,4 @@ object Crawler {
     store.loadAllPages(k).filter(col("status") === 200)
       .select(col("url"), col("text_sha256"))
   }
-
-  /** The pages table in the input_hint shape (url, warc_ts, html, text, lang)
-    * — what this engine would read from / publish to an Iceberg catalog on a
-    * real cluster. Synthesized deterministically from the crawled URLs. */
-  def pagesTable(spark: SparkSession, store: SnapshotStore): Dataset[PageRow] = {
-    import spark.implicits._
-    val k = store.head.getOrElse(0)
-    store.loadAllPages(k).filter(col("status") === 200).map { r =>
-      val html = graft.core.SyntheticWeb.htmlFor(r.url)
-      PageRow(r.url, new java.sql.Timestamp(r.fetch_ts), html.getBytes("UTF-8"),
-        r.text, langOf(r.url))
-    }
-  }
-
-  private val Langs = Array("en", "fr", "es", "zh", "de")
-  private def langOf(url: String): String =
-    Langs(math.floorMod(graft.core.Hashes.mix(graft.core.Hashes.xxh64(url), 97), 5).toInt)
 }

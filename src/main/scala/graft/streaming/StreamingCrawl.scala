@@ -56,15 +56,6 @@ object StreamingCrawl {
     pages.withColumn("url_hash", xxhash64(col("url")))
       .dropDuplicates(Seq("url"))
 
-  /** Watermark-bounded variant: dedups within the late-arrival horizon only,
-    * so state is bounded by the event-time window — the form that runs
-    * indefinitely (duplicates separated by more than `lateness` pass; the
-    * downstream batch seen-filter remains the exactness backstop). */
-  def dedupUrlsWithinWatermark(pages: DataFrame, lateness: String = "1 hour"): DataFrame =
-    pages.withColumn("url_hash", xxhash64(col("url")))
-      .withWatermark("warc_ts", lateness)
-      .dropDuplicatesWithinWatermark("url")
-
   final case class GateDecision(url: String, host: String, emitted_rank: Long)
 
   /** Stateful per-host politeness gate for a continuously-arriving frontier:

@@ -6,8 +6,9 @@ import graft.operators.{CrawlRound, FrontierGen}
 import graft.plans.Model.CrawlConfig
 import graft.sources.SnapshotStore
 
-/** Dev harness: one bench-sized crawl round with SPARK_GRAFT_TRACE stage
-  * timings. `runMain graft.tools.TraceRound <cpus> <nUrls>`. */
+/** Dev harness: the job timeline of one bench-sized crawl round, each job
+  * labelled by the round stage or write that launched it.
+  * `runMain graft.tools.TraceRound <cpus> <nUrls>`. */
 object TraceRound {
   def main(args: Array[String]): Unit = {
     val cpus = args.headOption.getOrElse("32").toInt
@@ -33,12 +34,12 @@ object TraceRound {
       new org.apache.spark.scheduler.SparkListener {
         private val starts = new java.util.concurrent.ConcurrentHashMap[Int, (Long, String)]()
         override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-          // callsite label: which action launched this job (maps job ids to
-          // pipeline stages exactly instead of by elimination). The result
-          // stage's name carries the action callsite ("parquet at X.scala:N").
-          val site = js.stageInfos.lastOption.map(_.name)
-            .orElse(Option(js.properties)
-              .flatMap(p => Option(p.getProperty("spark.job.description"))))
+          // stage label: the job description CrawlRound sets for each of
+          // its stages and launched writes; other jobs fall back to the
+          // result stage's action callsite ("parquet at X.scala:N")
+          val site = Option(js.properties)
+            .flatMap(p => Option(p.getProperty("spark.job.description")))
+            .orElse(js.stageInfos.lastOption.map(_.name))
             .getOrElse("?")
           starts.put(js.jobId, (js.time, site))
         }

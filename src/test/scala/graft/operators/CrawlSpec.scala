@@ -364,4 +364,43 @@ class CrawlSpec extends AnyFunSuite {
     val errs = store.loadAllPages(k).filter($"status" =!= 200)
     assert(errs.filter(length($"text") > 0 || size($"links") > 0).count() === 0)
   }
+
+  test("stage labels: every job of a round carries its stage or write name") {
+    val labels = Set("gate", "sequence", "fetch", "dedup", "commit",
+      "write-pages", "write-lineage", "write-frontier", "write-seen",
+      "write-filter", "compact-seen", "n-new", "link-candidates", "gate-counts")
+    val s = new SnapshotStore(spark, SparkTestSession.tempDir("crawl-labels"))
+    CrawlRound.initialize(spark, s, seeds, cfg)
+    val sc = spark.sparkContext
+    // job id -> description; the bus delivers events in order but
+    // asynchronously, so one-task marker jobs bracket the round and the
+    // test waits for the closing marker's start event
+    val jobs = new java.util.concurrent.ConcurrentHashMap[Int, String]()
+    val closed = new java.util.concurrent.CountDownLatch(1)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        val desc = String.valueOf(js.properties.getProperty("spark.job.description"))
+        jobs.put(js.jobId, desc)
+        if (desc == "after-round") closed.countDown()
+      }
+    }
+    def marker(name: String): Unit = {
+      sc.setJobDescription(name)
+      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
+    }
+    sc.addSparkListener(listener)
+    try {
+      marker("before-round")
+      CrawlRound.run(spark, s, 0, cfg)
+      marker("after-round")
+      assert(closed.await(60, java.util.concurrent.TimeUnit.SECONDS))
+    } finally sc.removeSparkListener(listener)
+    import scala.jdk.CollectionConverters._
+    val byId = jobs.asScala.toSeq.sortBy(_._1)
+    val from = byId.find(_._2 == "before-round").get._1
+    val to = byId.find(_._2 == "after-round").get._1
+    val round = byId.collect { case (id, d) if id > from && id < to => d }
+    assert(round.contains("fetch") && round.contains("write-pages"), round)
+    assert(round.filterNot(labels).isEmpty, round)
+  }
 }

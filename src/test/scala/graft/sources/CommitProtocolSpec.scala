@@ -45,20 +45,30 @@ class CommitProtocolSpec extends AnyFunSuite {
       }
     }
     val root = tmp()
-    val e = intercept[java.io.IOException] {
-      Crawler.run(spark, new SnapshotStore(spark, root.toString, failing), seeds,
-        rounds = 3, cfg)
-    }
-    assert(e.getMessage == "injected publish failure")
-    // the round drained its writes and dropped its staging dir
+    val sc = spark.sparkContext
+    val cachedBefore = sc.getPersistentRDDs.size
+    sc.setJobDescription("caller's own description")
+    try {
+      val e = intercept[java.io.IOException] {
+        Crawler.run(spark, new SnapshotStore(spark, root.toString, failing), seeds,
+          rounds = 3, cfg)
+      }
+      assert(e.getMessage == "injected publish failure")
+      // the round drained its writes, dropped its staging dir, released its
+      // caches and gave the caller back its job description
+      assert(sc.getPersistentRDDs.size === cachedBefore)
+      assert(sc.getLocalProperty("spark.job.description") === "caller's own description")
+    } finally sc.setJobDescription(null)
     val resumed = new SnapshotStore(spark, root.toString)
     assert(resumed.head.contains(1))
     assert(!Files.exists(root.resolve(".tmp-2")))
     Crawler.run(spark, resumed, seeds, rounds = 3, cfg)
     assert(resumed.head.contains(3))
+    assert(sc.getPersistentRDDs.size === cachedBefore)
 
     val clean = new SnapshotStore(spark, tmp().toString)
     Crawler.run(spark, clean, seeds, rounds = 3, cfg)
+    assert(sc.getPersistentRDDs.size === cachedBefore)
     assert(Crawler.ordering(spark, resumed).collect().toSeq ===
       Crawler.ordering(spark, clean).collect().toSeq)
     assert(Crawler.seenDigest(spark, resumed) === Crawler.seenDigest(spark, clean))
